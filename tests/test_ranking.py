@@ -5,7 +5,11 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from thecrowler_spark.operators.ranking import global_row_number, ntile_distributed
+from thecrowler_spark.operators.ranking import (
+    global_row_number,
+    lag_range_partitioned,
+    ntile_distributed,
+)
 
 
 def _nums(spark, n):
@@ -68,3 +72,28 @@ def test_global_row_number_no_global_sort(spark):
     for line in plan.splitlines():
         if "Sort [" in line and "true" in line.split("Sort [", 1)[1][:200]:
             raise AssertionError(f"global sort found: {line.strip()}")
+
+
+def test_lag_range_partitioned_null_group_spans_partitions(spark):
+    """A NULL group key is one group to the native window, so the lag
+    carried across a range-partition boundary must reach the NULL
+    group's next chunk too (the carry join is null-safe)."""
+    df = spark.range(60).select(
+        F.when(F.col("id") < 40, F.lit(None)).otherwise(F.col("id") % 2).cast("int").alias("g"),
+        F.col("id").alias("t"),
+        (F.col("id") * 10).alias("v"),
+    )
+    pids = {
+        r["_p"]
+        for r in df.repartitionByRange(4, "g", "t")
+        .filter(F.col("g").isNull())
+        .select(F.spark_partition_id().alias("_p"))
+        .collect()
+    }
+    assert len(pids) >= 2, "the NULL group must span range partitions"
+    got = lag_range_partitioned(df, ["g"], ["t"], ["v"], num_partitions=4)
+    w = Window.partitionBy("g").orderBy("t")
+    want = {
+        (r["t"], r["lv"]) for r in df.select("t", F.lag("v").over(w).alias("lv")).collect()
+    }
+    assert {(r["t"], r["_lag_v"]) for r in got.collect()} == want

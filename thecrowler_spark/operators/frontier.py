@@ -43,10 +43,11 @@ from __future__ import annotations
 
 import json
 import time
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import urls as U
@@ -134,6 +135,31 @@ class CrawlConfig:
 #: per-source counter fields (TotalPages/Links/Skipped/Duplicates/Errors
 #: of the reference's Status struct, pkg/crawler/types.go:55-84)
 COUNTER_FIELDS = ("pages", "links", "skipped", "duplicates", "errors")
+#: the counters a round's own rows decide, and the category each counts
+_STAT_CATEGORIES = (
+    ("pages", CAT_FETCH_OK),
+    ("skipped", CAT_SKIP),
+    ("duplicates", CAT_DUP),
+    ("errors", CAT_FETCH_ERR),
+)
+#: parquet codec of the per-round state commits: zstd, Iceberg's default
+#: data-file codec, about a third smaller than snappy on crawl state
+STATE_CODEC = "zstd"
+#: columns of a frontier (and deferred) row
+FRONTIER_COLS = ("source_id", "source_url", "restricted", "priority", "seq", "link", "page_url")
+
+
+def _observed(df: DataFrame, *metrics) -> tuple[DataFrame, Observation]:
+    """``df`` with ``metrics`` observed at its root: the action that
+    materializes it collects them, with no Spark job of its own. Keep
+    the observation at the root of what is materialized — observed under
+    a join, the metrics row fails to convert back to Python."""
+    obs = Observation()
+    return df.observe(obs, *metrics), obs
+
+
+def _obs_int(obs: Observation) -> dict[str, int]:
+    return {k: int(v or 0) for k, v in obs.get.items()}
 
 
 @dataclass
@@ -408,8 +434,10 @@ def _robots_block(level: DataFrame, robots: DataFrame | None) -> DataFrame:
 class CrawlEngine:
     """Drives BFS rounds for a batch of claimed sources.
 
-    ``documents`` is parsed once (:func:`..operators.spans.parse_documents`)
-    and persisted; every round's fetch is an equi-join against it.
+    Every round's fetch is an equi-join against a persisted slim
+    projection of ``documents`` (doc_id, extracted links, title); the
+    full :func:`..operators.spans.parse_documents` parse is
+    :attr:`parsed`, built only when read.
     """
 
     def __init__(
@@ -450,13 +478,11 @@ class CrawlEngine:
             from .dust import dust_param_dim
 
             self._dust_dim = dust_param_dim(dust_rules).persist()
-        #: full parse (langid, keywords, content_hash, …) for index-star
-        #: consumers only — persist() is lazy, so a crawl that never
-        #: reads .parsed (the common case) never pays for it
-        self.parsed = SP.parse_documents(documents).persist()
+        self._documents = documents
+        self._parsed: DataFrame | None = None
         # slim fetch-join projection built DIRECTLY from the raw corpus:
         # the crawl loop needs only (doc_id, links, title), all cheap
-        # span projections. Deriving this from self.parsed would chain
+        # span projections. Deriving this from .parsed would chain
         # the caches — materializing the fetch side would force the full
         # parse of the ENTIRE corpus (trigram langid + keyword sort +
         # sha256 per doc) before the first fetch, an O(corpus) round-0
@@ -467,6 +493,30 @@ class CrawlEngine:
             SP.extracted_links(F.col("spans")).alias("links"),
             SP.title(F.col("spans")).alias("title"),
         ).persist()
+
+    @property
+    def parsed(self) -> DataFrame:
+        """Full parse (langid, keywords, content_hash, …) for index-star
+        consumers only, built and persisted on first access: persist()
+        plans the whole parse at once, so a crawl that never reads it
+        (the common case) must not build it."""
+        if self._parsed is None:
+            self._parsed = SP.parse_documents(self._documents).persist()
+        return self._parsed
+
+    @contextmanager
+    def _phase(self, run_id: str, rnd: int, phase: str):
+        """Name the Spark jobs of one engine phase in the event log and
+        UI: ``spark.job.description`` = ``crawl/<run_id>/r<k>/<phase>``,
+        restored to the caller's value afterwards. The job group stays
+        the caller's (a benchmark or scheduler attributes jobs by it)."""
+        sc = self.spark.sparkContext
+        prev = sc.getLocalProperty("spark.job.description")
+        sc.setLocalProperty("spark.job.description", f"crawl/{run_id}/r{rnd}/{phase}")
+        try:
+            yield
+        finally:
+            sc.setLocalProperty("spark.job.description", prev)
 
     def _seen_norm(self, c) -> F.Column:
         """URL-seen dedup key: NormalizeURL (lower + rtrim-slash), with
@@ -573,7 +623,11 @@ class CrawlEngine:
             src["source_url"] == F.col("_doc"),
             "left",
         )
-        seed_ok = seed_fetch.filter(F.col("_doc").isNotNull())
+        # every depth-0 table is a projection of the fetched seeds and
+        # their links: materialize each once instead of re-planning them
+        # under every commit
+        with self._phase(run_id, 0, "seed"):
+            seed_ok = seed_fetch.filter(F.col("_doc").isNotNull()).localCheckpoint(eager=True)
         # initial links keep page_url = source URL (web.go:949-951)
         frontier = (
             seed_ok.select(
@@ -618,6 +672,8 @@ class CrawlEngine:
                 .drop("_n", "_apos")
             )
             frontier = frontier.unionByName(alt.select(*frontier.columns))
+        with self._phase(run_id, 0, "seed_links"):
+            frontier = frontier.localCheckpoint(eager=True)
         # TotalLinks stores the initial count BEFORE the restricted gate
         # (crawler.go:412), so aggregate first …
         initial_links = frontier.groupBy("source_id").agg(F.count("*").alias("links"))
@@ -682,23 +738,24 @@ class CrawlEngine:
             # live state = this run's committed deltas ∪ the caller's
             # prior-run state (stored by ITS run's checkpoints)
             visited = visited.unionByName(prior_vis)
+        # the round's driver-side numbers are observed on its commits
+        frontier, frontier_obs = _observed(frontier, F.count(F.lit(1)).alias("rows"))
         frontier = self._ckpt(frontier, run_id, 0, "frontier")
+        counters, counters_obs = _observed(counters, F.sum("pages").alias("pages"))
         counters = self._ckpt(counters, run_id, 0, "counters")
-        # the round's ONLY driver-side materialization: one totals row
-        tot = counters.agg(F.sum("pages").alias("p")).first()
         lineage.append(
             {
                 "run_id": run_id,
                 "round": 0,
                 "frontier_in": 0,
-                "fetched": int(tot["p"] or 0),
+                "fetched": _obs_int(counters_obs)["pages"],
                 "elapsed_sec": time.time() - t0,
             }
         )
         self._write_manifest(run_id, 0, 0)
         return self._run_rounds(
             run_id, pages, visited, frontier, counters, 0, lineage,
-            prior_visited=prior_vis,
+            prior_visited=prior_vis, n_frontier=_obs_int(frontier_obs)["rows"],
         )
 
     def release_seen(self, visited: DataFrame, eligible: DataFrame) -> DataFrame:
@@ -748,6 +805,7 @@ class CrawlEngine:
         lineage: list[dict[str, Any]],
         deferred: DataFrame | None = None,
         prior_visited: DataFrame | None = None,
+        n_frontier: int | None = None,
     ) -> CrawlResult:
         cfg = self.cfg
         max_depth = 1 if cfg.max_depth == 0 else cfg.max_depth
@@ -755,10 +813,15 @@ class CrawlEngine:
         if cfg.max_depth == 0:
             max_depth = current_depth + 1
 
-        while current_depth < max_depth and current_depth < cfg.max_rounds:
+        # a resumed run counts its committed frontier and deferred rows
+        # once; from then on every round observes them on its own commits
+        if n_frontier is None:
             n_frontier = frontier.count()
-            n_deferred = deferred.count() if deferred is not None else 0
-            if n_frontier + n_deferred == 0:
+        n_deferred = deferred.count() if deferred is not None else 0
+
+        while current_depth < max_depth and current_depth < cfg.max_rounds:
+            n_in = n_frontier + n_deferred
+            if n_in == 0:
                 break
             t0 = time.time()
             depth = current_depth + 1
@@ -773,7 +836,6 @@ class CrawlEngine:
             level = level.withColumn(
                 "seq", self._seq_expr(F.row_number().over(w_seq))
             ).drop("_pri")
-            deferred = None
 
             # explicit skew-kill: spread one host's links over salt buckets
             level = level.repartition(
@@ -781,18 +843,27 @@ class CrawlEngine:
                 U.salted_host_key(U.url_hostname("link"), F.col("link"), cfg.salt_buckets),
             )
 
-            out = self._process_level(level, visited, pages, depth, counters)
-            new_frontier, new_pages, new_visited_rows, stats, deferred, processed = out
+            rt, tot = self._process_level(level, visited, pages, run_id, depth, counters)
+            category = F.col("category")
 
-            # effects → next-round state. Pages/visited are APPEND-ONLY:
-            # each round commits only its DELTA (the Iceberg-append
-            # analog) and the live state is a union-scan over committed
-            # deltas — per-round write cost stays O(delta), not
-            # O(total-so-far), which is the difference between a crawl
-            # that holds at 10^10 URLs and one whose checkpoint I/O grows
-            # quadratically with crawl length.
-            visited_delta = new_visited_rows.dropDuplicates(["source_id", "norm_url"]).join(
-                visited, ["source_id", "norm_url"], "left_anti"
+            # effects → next-round state, every one a filter or projection
+            # of the round table. Pages/visited are APPEND-ONLY: each round
+            # commits only its DELTA (the Iceberg-append analog) and the
+            # live state is a union-scan over committed deltas — per-round
+            # write cost stays O(delta), not O(total-so-far), which is the
+            # difference between a crawl that holds at 10^10 URLs and one
+            # whose checkpoint I/O grows quadratically with crawl length.
+            # Attempted rows are unseen and first in their (source_id,
+            # norm_url) group (that is what made them fetch_ok/fetch_err
+            # rather than dup), so their projection IS the visited delta.
+            visited_delta = rt.filter(category.isin(CAT_FETCH_OK, CAT_FETCH_ERR)).select(
+                "source_id", "norm_url"
+            )
+            new_pages = rt.filter(category == CAT_FETCH_OK).select(
+                "source_id",
+                F.lit(depth).alias("depth"),
+                "fetch_seq",
+                F.col("url_link").alias("url"),
             )
             pages = self._ckpt_delta(pages, new_pages, run_id, depth, "pages")
             visited = self._ckpt_delta(visited, visited_delta, run_id, depth, "visited")
@@ -801,7 +872,19 @@ class CrawlEngine:
                 # re-attach the chained prior-run state (the no-work_dir
                 # branch unions onto cur_state, which already has it)
                 visited = visited.unionByName(prior_visited)
-            frontier = self._ckpt(self._trap_valve(new_frontier), run_id, depth, "frontier")
+
+            stats = rt.groupBy("source_id").agg(
+                *[
+                    F.sum((category == c).cast("long")).alias(k)
+                    for k, c in _STAT_CATEGORIES
+                ]
+            )
+            new_links = self._next_links(rt, counters, stats)
+            frontier, frontier_obs = _observed(
+                self._trap_valve(new_links), F.count(F.lit(1)).alias("rows")
+            )
+            frontier = self._ckpt(frontier, run_id, depth, "frontier")
+            n_frontier = _obs_int(frontier_obs)["rows"]
             if self._seen_mode == "cuckoo" and self._cuckoo is not None:
                 # incremental maintenance: insert only this round's
                 # visited delta (O(delta)); checkpoint the small blob
@@ -820,16 +903,25 @@ class CrawlEngine:
                     ),
                     run_id, depth, "cuckoo",
                 )
-            if deferred is not None:
+            if self.budgets is not None:
                 # deferred rows are next-round input state — commit them
                 # like the frontier so kill-and-resume replays them too
-                deferred = self._ckpt(deferred, run_id, depth, "deferred")
+                deferred = self._ckpt(
+                    rt.filter(category == CAT_DEFERRED).select(*FRONTIER_COLS),
+                    run_id, depth, "deferred",
+                )
+            n_deferred = tot["deferred"]
 
+            # per-source links: the committed frontier, counted before
+            # the trap valve (capped links were still discovered)
+            links = (new_links if cfg.trap_cap else frontier).groupBy("source_id").agg(
+                F.count("*").cast("long").alias("links")
+            )
             # merge the round's per-source stats into the running
             # counters — a full outer join + coalesce sums, all Spark-side
             merged = (
                 counters.alias("c")
-                .join(stats.alias("s"), "source_id", "full")
+                .join(stats.join(links, "source_id", "full").alias("s"), "source_id", "full")
                 .select(
                     "source_id",
                     *[
@@ -843,46 +935,27 @@ class CrawlEngine:
             )
             counters = self._ckpt(merged, run_id, depth, "counters")
 
-            # the round's driver-side materializations: one totals row +
-            # one per-partition skew row (both O(1)-sized results; the
-            # skew agg runs on the already-persisted level)
-            tot = stats.agg(
-                *[F.sum(k).alias(k) for k in ("pages", "skipped", "duplicates", "errors")]
-            ).first()
-            skew = (
-                processed.groupBy(F.spark_partition_id().alias("_pid"))
-                .count()
-                .agg(
-                    F.count("*").alias("n_parts"),
-                    F.max("count").alias("max_rows"),
-                    F.sum("count").alias("tot_rows"),
-                )
-                .first()
-            )
-            processed.unpersist()
-            n_parts = int(skew["n_parts"] or 0) if skew else 0
-            max_rows = int(skew["max_rows"] or 0) if skew else 0
-            tot_rows = int(skew["tot_rows"] or 0) if skew else 0
             lineage.append(
                 {
                     "run_id": run_id,
                     "round": depth,
-                    "frontier_in": n_frontier + n_deferred,
-                    "fetched": int(tot["pages"] or 0) if tot else 0,
-                    "skipped": int(tot["skipped"] or 0) if tot else 0,
-                    "duplicates": int(tot["duplicates"] or 0) if tot else 0,
-                    "errors": int(tot["errors"] or 0) if tot else 0,
+                    "frontier_in": n_in,
+                    "fetched": tot["pages"],
+                    "skipped": tot["skipped"],
+                    "duplicates": tot["duplicates"],
+                    "errors": tot["errors"],
                     "elapsed_sec": time.time() - t0,
-                    # per-partition metrics over the PROCESSED level's
-                    # final layout (i.e. after the level's join/window
-                    # shuffles, not the salted repartition itself):
-                    # skew_ratio 1.0 = even; >> 1 = end-of-round
-                    # imbalance worth investigating (north-rule
-                    # per-partition observability hook)
-                    "partitions": n_parts,
-                    "max_partition_rows": max_rows,
-                    "skew_ratio": round(max_rows * n_parts / tot_rows, 3)
-                    if tot_rows
+                    # per-partition metrics over the round table's own
+                    # layout (the processed level's final partitioning,
+                    # after the level's join/window shuffles, not the
+                    # salted repartition itself): skew_ratio 1.0 = even;
+                    # >> 1 = end-of-round imbalance worth investigating
+                    "partitions": tot["partitions"],
+                    "max_partition_rows": tot["max_partition_rows"],
+                    "skew_ratio": round(
+                        tot["max_partition_rows"] * tot["partitions"] / tot["rows"], 3
+                    )
+                    if tot["rows"]
                     else 1.0,
                 }
             )
@@ -928,10 +1001,22 @@ class CrawlEngine:
         level: DataFrame,
         visited: DataFrame,
         pages: DataFrame,
+        run_id: str,
         depth: int,
         counters: DataFrame,
-    ):
+    ) -> tuple[DataFrame, dict[str, int]]:
         """One BFS level for all sources — the worker loop, set-at-a-time.
+
+        Classifies every row of the level once, into the checkpointed
+        **round table**: one row per processed link with its
+        ``category``, ``fetch_seq`` (fetch_ok rows), ``_doc_links``
+        (fetch_ok rows), and ``_next_attempt``/``_next_ok`` (the seq and
+        outcome of the next attempted row, for skipped-link
+        resurrection). Every state delta of the round is a filter or
+        projection of it. Returns the table and the round's totals,
+        observed while the table is materialized: rows per category
+        (``pages`` = fetch_ok), ``rows``, and the table's non-empty
+        ``partitions`` and ``max_partition_rows``.
 
         ``counters`` is the running per-source counter table (small:
         one row per claimed source); it is broadcast-joined wherever the
@@ -1034,13 +1119,14 @@ class CrawlEngine:
 
         # politeness budget (north-rule mode): cap successful fetches per
         # host per round; excess re-queued next round, ordered first.
-        # Two-phase skew-safe rank (the operators/politeness.py contract):
-        # phase 1 ranks budget-capped fetch_ok rows within (host, salt) —
-        # parallel across salt buckets; a local rank > B implies global
-        # rank > B, so those rows defer without ever entering a
-        # whole-host window. Phase 2 ranks only the ≤ B×S survivors per
-        # host. Identical outcome to a single host-wide rank, but a
-        # mega-host with 10^9 pending URLs never pins one task.
+        # Two-phase skew-safe rank (the operators/politeness.py contract)
+        # as columns of the one stream: _r1 ranks budget-capped fetch_ok
+        # rows within (host, salt) — parallel across salt buckets; a
+        # local rank > B implies global rank > B, so those rows defer
+        # without entering a whole-host window. _r2 ranks only the ≤ B×S
+        # survivors per host; every other row stays in its salt bucket.
+        # Identical outcome to a single host-wide rank, but a mega-host
+        # with 10^9 pending URLs never pins one task.
         if self.budgets is not None:
             lv = lv.withColumn("_bhost", U.url_hostname("url_link"))
             lv = lv.join(
@@ -1048,164 +1134,121 @@ class CrawlEngine:
                 ["_bhost"],
                 "left",
             )
-            is_capped = (F.col("category") == CAT_FETCH_OK) & F.col(
-                "max_fetches_per_round"
-            ).isNotNull()
-            rest = lv.filter(~is_capped).withColumn("_over", F.lit(False))
-            capped = lv.filter(is_capped).withColumn(
+            budget = F.col("max_fetches_per_round")
+            lv = lv.withColumn(
+                "_capped", (F.col("category") == CAT_FETCH_OK) & budget.isNotNull()
+            ).withColumn(
                 "_salt", F.pmod(F.xxhash64(F.col("source_id"), F.col("seq")), F.lit(cfg.salt_buckets))
             )
             order = [F.col("priority"), F.col("source_id"), F.col("seq")]
-            w1 = Window.partitionBy("_bhost", "_salt").orderBy(*order)
-            capped = capped.withColumn("_r1", F.row_number().over(w1))
-            over1 = capped.filter(F.col("_r1") > F.col("max_fetches_per_round")).withColumn(
-                "_over", F.lit(True)
-            )
-            surv = capped.filter(F.col("_r1") <= F.col("max_fetches_per_round"))
-            w2 = Window.partitionBy("_bhost").orderBy(*order)
-            surv = surv.withColumn(
-                "_over", F.row_number().over(w2) > F.col("max_fetches_per_round")
-            )
-            lv = rest.unionByName(over1.drop("_salt", "_r1")).unionByName(
-                surv.drop("_salt", "_r1")
-            )
+            w1 = Window.partitionBy("_bhost", "_salt", "_capped").orderBy(*order)
+            lv = lv.withColumn("_r1", F.row_number().over(w1))
+            surv = F.col("_capped") & (F.col("_r1") <= budget)
+            w2 = Window.partitionBy(
+                "_bhost", F.when(surv, F.lit(-1)).otherwise(F.col("_salt"))
+            ).orderBy(*order)
+            lv = lv.withColumn("_r2", F.row_number().over(w2))
+            over = F.col("_capped") & ((F.col("_r1") > budget) | (F.col("_r2") > budget))
             lv = lv.withColumn(
-                "category",
-                F.when(F.col("_over"), F.lit(CAT_DEFERRED)).otherwise(F.col("category")),
-            ).drop("max_fetches_per_round", "_over", "_bhost")
+                "category", F.when(over, F.lit(CAT_DEFERRED)).otherwise(F.col("category"))
+            ).drop("max_fetches_per_round", "_bhost", "_capped", "_salt", "_r1", "_r2")
 
-        # max_links cutoff: worker stops once TotalPages reaches the cap
-        # (crawler.go:2203-2206) — guard precedes every job. The worker's
-        # TotalPages-so-far comes from the counters table via a broadcast
-        # join (NOT a per-source plan literal, which explodes the plan at
-        # a 10^5+-source claim).
+        # the worker's TotalPages-so-far comes from the counters table via
+        # a broadcast join (NOT a per-source plan literal, which explodes
+        # the plan at a 10^5+-source claim)
         lv = lv.join(
             F.broadcast(counters.select("source_id", F.col("pages").alias("_pages_before"))),
             "source_id",
             "left",
         ).withColumn("_pages_before", F.coalesce(F.col("_pages_before"), F.lit(0)))
-        w_cum = (
-            Window.partitionBy("source_id")
-            .orderBy("seq")
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        cum_ok = F.coalesce(
-            F.sum(F.when(F.col("category") == CAT_FETCH_OK, 1).otherwise(0)).over(w_cum),
-            F.lit(0),
-        )
+        # the round's per-source windows all share one partitioning and
+        # order, so they run as one sort
+        ok = F.col("category") == CAT_FETCH_OK
+        n_ok = F.sum(ok.cast("int"))
+        w_seq = Window.partitionBy(*self._seq_parts()).orderBy("seq")
         if cfg.max_links > 0:
-            lv = lv.withColumn(
-                "_processed", F.col("_pages_before") + cum_ok < F.lit(cfg.max_links)
+            # max_links cutoff: worker stops once TotalPages reaches the
+            # cap (crawler.go:2203-2206) — guard precedes every job
+            cum_ok = F.coalesce(
+                n_ok.over(w_seq.rowsBetween(Window.unboundedPreceding, -1)), F.lit(0)
             )
-        else:
-            lv = lv.withColumn("_processed", F.lit(True))
-
-        processed = lv.filter(F.col("_processed")).persist()
-
-        deferred_df = None
-        if self.budgets is not None:
-            deferred_df = processed.filter(F.col("category") == CAT_DEFERRED).select(
-                "source_id", "source_url", "restricted", "priority", "seq", "link", "page_url"
+            lv = (
+                lv.withColumn("_processed", F.col("_pages_before") + cum_ok < F.lit(cfg.max_links))
+                .filter(F.col("_processed"))
+                .drop("_processed")
             )
-
-        # ---- per-source stats (single agg pass, stays a DataFrame) ----
-        stats = processed.groupBy("source_id").agg(
-            F.sum(F.when(F.col("category") == CAT_FETCH_OK, 1).otherwise(0))
-            .cast("long")
-            .alias("pages"),
-            F.sum(F.when(F.col("category") == CAT_SKIP, 1).otherwise(0))
-            .cast("long")
-            .alias("skipped"),
-            F.sum(F.when(F.col("category") == CAT_DUP, 1).otherwise(0))
-            .cast("long")
-            .alias("duplicates"),
-            F.sum(F.when(F.col("category") == CAT_FETCH_ERR, 1).otherwise(0))
-            .cast("long")
-            .alias("errors"),
-        )
-
-        # ---- effects ----
-        attempted = processed.filter(F.col("category").isin(CAT_FETCH_OK, CAT_FETCH_ERR))
-        new_visited = attempted.select("source_id", "norm_url").dropDuplicates()
 
         # fetch_seq = pages_so_far*S + shard-interleaved index: dense and
         # equal to the reference's TotalPages order when S == 1 (parity);
         # sparse but still unique per source across rounds when S > 1
         # (round r+1 starts at (pages_before + n_fetched)·S, above every
         # round-r value (pages_before·S + fidx), fidx < n_fetched·S).
-        w_fetch = Window.partitionBy(*self._seq_parts()).orderBy("seq")
-        fetched = (
-            processed.filter(F.col("category") == CAT_FETCH_OK)
-            .withColumn("_fidx", self._seq_expr(F.row_number().over(w_fetch)))
-            .withColumn(
-                "fetch_seq",
-                F.col("_pages_before") * F.lit(cfg.ordering_shards) + F.col("_fidx"),
-            )
+        fidx = self._seq_expr(
+            n_ok.over(w_seq.rowsBetween(Window.unboundedPreceding, Window.currentRow))
         )
-        new_pages = fetched.select(
-            "source_id",
-            F.lit(depth).alias("depth"),
-            "fetch_seq",
-            F.col("url_link").alias("url"),
+        # each skipped row attaches to the NEXT attempted row, and only
+        # when that fetch succeeds (web.go:1864: pageCache.Links +=
+        # skippedURLs on success; cleared on error)
+        attempt = F.when(
+            F.col("category").isin(CAT_FETCH_OK, CAT_FETCH_ERR),
+            F.struct(F.col("seq").alias("seq"), ok.alias("ok")),
         )
+        nxt = F.min(attempt).over(w_seq.rowsBetween(1, Window.unboundedFollowing))
+        rt = lv.withColumn("_next", nxt).select(
+            *FRONTIER_COLS,
+            "url_link",
+            "norm_url",
+            "category",
+            F.when(ok, F.col("_pages_before") * F.lit(cfg.ordering_shards) + fidx).alias(
+                "fetch_seq"
+            ),
+            F.when(ok, F.col("_doc_links")).alias("_doc_links"),
+            F.col("_next.seq").alias("_next_attempt"),
+            F.col("_next.ok").alias("_next_ok"),
+            # partition id (high bits) + record number within it: the
+            # table's own layout, for the lineage row's skew metrics
+            F.monotonically_increasing_id().alias("_mid"),
+        )
+        rec = F.col("_mid").bitwiseAND(F.lit((1 << 33) - 1))
+        rt, obs = _observed(
+            rt,
+            F.count(F.lit(1)).alias("rows"),
+            *[
+                F.sum((F.col("category") == c).cast("long")).alias(k)
+                for k, c in (*_STAT_CATEGORIES, ("deferred", CAT_DEFERRED))
+            ],
+            F.sum((rec == 0).cast("long")).alias("partitions"),
+            F.max(rec + 1).alias("max_partition_rows"),
+        )
+        with self._phase(run_id, depth, "classify"):
+            rt = rt.localCheckpoint(eager=True)
+        return rt, _obs_int(obs)
 
-        # ---- next frontier: extracted links + skipped-link resurrection ----
-        # each skipped row attaches to the NEXT attempted row (web.go:1864:
-        # pageCache.Links += skippedURLs on success; cleared on error).
-        w_next = (
-            Window.partitionBy(*self._seq_parts())
-            .orderBy("seq")
-            .rowsBetween(1, Window.unboundedFollowing)
-        )
-        attempt_seq = F.when(
-            F.col("category").isin(CAT_FETCH_OK, CAT_FETCH_ERR), F.col("seq")
-        )
-        lv2 = processed.withColumn("_next_attempt", F.min(attempt_seq).over(w_next))
-
-        ok_rows = lv2.filter(F.col("category") == CAT_FETCH_OK).select(
+    def _next_links(self, rt: DataFrame, counters: DataFrame, stats: DataFrame) -> DataFrame:
+        """The round's discovered links in next-frontier order: each
+        fetched page's extracted links, with the skipped links that
+        resurrect onto it, numbered per source; MaxLinks-truncated."""
+        cfg = self.cfg
+        extracted = rt.filter(F.col("category") == CAT_FETCH_OK).select(
             "source_id",
             "source_url",
             "restricted",
             "priority",
             F.col("seq").alias("_attach"),
-            F.col("url_link").alias("_cur_url"),
-            F.col("_doc_links"),
-        )
-        extracted = ok_rows.select(
+            F.lit(0).alias("_res"),
+            F.posexplode_outer("_doc_links").alias("_pos", "link"),
+            F.col("url_link").alias("page_url"),
+        ).filter(F.col("link").isNotNull())
+        resurrected = rt.filter((F.col("category") == CAT_SKIP) & F.col("_next_ok")).select(
             "source_id",
             "source_url",
             "restricted",
             "priority",
-            "_attach",
-            F.lit(0).alias("_res"),
-            F.posexplode_outer("_doc_links").alias("_pos", "link"),
-            F.col("_cur_url").alias("page_url"),
-        ).filter(F.col("link").isNotNull())
-
-        ok_seqs = lv2.filter(F.col("category") == CAT_FETCH_OK).select(
-            F.col("source_id").alias("_ok_sid"), F.col("seq").alias("_ok_seq")
-        )
-        skips = lv2.filter(
-            (F.col("category") == CAT_SKIP) & F.col("_next_attempt").isNotNull()
-        )
-        resurrected = (
-            skips.join(
-                ok_seqs,
-                (skips["source_id"] == ok_seqs["_ok_sid"])
-                & (skips["_next_attempt"] == ok_seqs["_ok_seq"]),
-                "left_semi",
-            )
-            .select(
-                "source_id",
-                "source_url",
-                "restricted",
-                "priority",
-                F.col("_next_attempt").alias("_attach"),
-                F.lit(1).alias("_res"),
-                F.col("seq").alias("_pos"),
-                F.col("link"),
-                F.col("page_url"),
-            )
+            F.col("_next_attempt").alias("_attach"),
+            F.lit(1).alias("_res"),
+            F.col("seq").alias("_pos"),
+            F.col("link"),
+            F.col("page_url"),
         )
 
         new_links = extracted.unionByName(resurrected)
@@ -1232,22 +1275,7 @@ class CrawlEngine:
             new_links = new_links.filter(
                 F.col("seq") < F.greatest(budget_col, F.lit(0))
             ).drop("_pages_after")
-
-        links_df = new_links.groupBy("source_id").agg(F.count("*").cast("long").alias("links"))
-        stats = stats.join(links_df, "source_id", "full").select(
-            "source_id",
-            *[
-                F.coalesce(F.col(k), F.lit(0)).cast("long").alias(k)
-                for k in ("pages", "skipped", "duplicates", "errors", "links")
-            ],
-        )
-
-        new_frontier = new_links.select(
-            "source_id", "source_url", "restricted", "priority", "seq", "link", "page_url"
-        )
-        # caller unpersists `processed` once the round's state is committed
-        # (stats/new_* all derive from it)
-        return new_frontier, new_pages, new_visited, stats, deferred_df, processed
+        return new_links.select(*FRONTIER_COLS)
 
     # ------------------------------------------------------- checkpoint
 
@@ -1257,11 +1285,13 @@ class CrawlEngine:
         Production: Iceberg MERGE + snapshot id per round; locally a
         parquet dir per (run, round, table) with identical semantics.
         """
-        if not self.work_dir:
-            return df.localCheckpoint(eager=True)
-        path = f"{self.work_dir}/{run_id}/r{rnd:04d}/{name}"
-        df.write.mode("overwrite").parquet(path)
-        return self.spark.read.parquet(path)
+        with self._phase(run_id, rnd, name):
+            if not self.work_dir:
+                return df.localCheckpoint(eager=True)
+            path = f"{self.work_dir}/{run_id}/r{rnd:04d}/{name}"
+            df.write.mode("overwrite").option("compression", STATE_CODEC).parquet(path)
+            # the schema is known: reading back runs no inference job
+            return self.spark.read.schema(df.schema).parquet(path)
 
     def _delta_dirs(self, run_id: str, up_to_round: int, name: str) -> list[str]:
         import glob
@@ -1287,11 +1317,14 @@ class CrawlEngine:
         over all committed deltas ≤ rnd — one scan node, lineage cut,
         per-round write cost O(delta) instead of O(total state).
         """
-        if not self.work_dir:
-            return cur_state.unionByName(delta).localCheckpoint(eager=True)
-        path = f"{self.work_dir}/{run_id}/r{rnd:04d}/{name}_delta"
-        delta.write.mode("overwrite").parquet(path)
-        return self.spark.read.parquet(*self._delta_dirs(run_id, rnd, name))
+        with self._phase(run_id, rnd, name):
+            if not self.work_dir:
+                return cur_state.unionByName(delta).localCheckpoint(eager=True)
+            path = f"{self.work_dir}/{run_id}/r{rnd:04d}/{name}_delta"
+            delta.write.mode("overwrite").option("compression", STATE_CODEC).parquet(path)
+            return self.spark.read.schema(delta.schema).parquet(
+                *self._delta_dirs(run_id, rnd, name)
+            )
 
     def _write_manifest(self, run_id: str, rnd: int, depth: int) -> None:
         """Per-round commit record — the resume point (reference analog:

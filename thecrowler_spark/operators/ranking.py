@@ -130,8 +130,9 @@ def lag_range_partitioned(
     3. boundary carry-in: the last row of each (_pid, group) chunk
        (one ``max_by`` partial-agg row per chunk — a tiny table) hands
        its lag values to the FIRST row of the group's next chunk via a
-       broadcast join; the carry lookup is itself a lag over the tiny
-       chunk table, bounded by chunks-per-group ≤ #partitions.
+       broadcast join, null-safe on the group keys; the carry lookup is
+       itself a lag over the tiny chunk table, bounded by
+       chunks-per-group ≤ #partitions.
 
     Returns ``df`` + ``_lag_<c>`` columns; lag values are identical to
     the native window's (same per-group total order).
@@ -162,7 +163,19 @@ def lag_range_partitioned(
     carry = lasts.withColumn("_carry", F.lag("_lastvals").over(w_carry)).select(
         "_pid", *group_cols, "_carry"
     )
-    out = out.join(F.broadcast(carry), ["_pid", *group_cols], "left")
+    # null-safe on the group keys: a NULL group is one group to the
+    # window above, so its carry must reach its next chunk too
+    carry = carry.select(
+        F.col("_pid").alias("_cpid"),
+        *[F.col(c).alias(f"_c_{c}") for c in group_cols],
+        "_carry",
+    )
+    on = F.col("_pid") == F.col("_cpid")
+    for c in group_cols:
+        on = on & F.col(c).eqNullSafe(F.col(f"_c_{c}"))
+    out = out.join(F.broadcast(carry), on, "left").drop(
+        "_cpid", *[f"_c_{c}" for c in group_cols]
+    )
     for c in lag_cols:
         out = out.withColumn(
             f"_lag_{c}",
