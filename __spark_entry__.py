@@ -5320,55 +5320,6 @@ def _cdx_latest_oracle_sql() -> str:
     """
 
 
-#: sessions already warmed by _warm_session (session ids, not results)
-_WARMED_SESSIONS: set = set()
-
-
-def _warm_session() -> None:
-    """Complete the session warm-up ``bench.py`` begins.
-
-    bench.py's own pre-suite warm-up ("JVM/codegen/scan warm-up so the
-    first headline query isn't charged session start-up costs the
-    others don't pay") covers the range-scan and simple-agg paths, but
-    the FIRST headline query still paid one-time costs the warm-up
-    never touches: the noop datasource/committer init and the janino
-    first-compiles of the broadcast-join / window / shuffle-exchange
-    codegen paths every query uses. Running one tiny synthetic job
-    through those paths here — ``queries()`` is called before the
-    timed region — measured url_normalize 2.95 → 2.27 s and the next
-    two queries −0.2 s each on a quiet host. Touches ONLY
-    ``spark.range`` data: nothing from the fixture directory is read,
-    computed, or cached, so every timed query still computes entirely
-    from the parquet inputs. Once per session; no-op without an active
-    session (oracle gates and tests that pre-build the registry)."""
-    spark = SparkSession.getActiveSession()
-    if spark is None:
-        return
-    sid = id(spark)
-    if sid in _WARMED_SESSIONS:
-        return
-    _WARMED_SESSIONS.add(sid)
-    try:
-        from pyspark.sql import Window
-
-        df = spark.range(0, 10_000, 1, 4).select(
-            F.col("id"),
-            (F.col("id") % 7).alias("k"),
-            F.col("id").cast("string").alias("s"),
-        )
-        w = Window.partitionBy("k").orderBy("s")
-        small = df.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= 3)
-        dim = spark.range(7).select(F.col("id").alias("k"), F.lit("x").alias("v"))
-        out = small.join(F.broadcast(dim), "k").groupBy("k").agg(
-            F.count("*").alias("n"), F.max("s").alias("m")
-        )
-        out.write.format("noop").mode("overwrite").save()
-    except Exception:
-        # warm-up is best-effort; a sandboxed/odd session must not
-        # break registry construction
-        pass
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """Registry order IS the grading order: the driver grades the first
     50 entries only, so the window is curated per round (r2 verdict
@@ -5382,7 +5333,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     driver-green in r3 or later, and all 130 stay green in
     scripts/oracle_gate.py full-registry runs regardless of the driver
     window)."""
-    _warm_session()
     return {
         # --- r5 window: new this round, never driver-graded ----------
         "feed_items": q_feed_items,

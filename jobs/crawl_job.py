@@ -44,10 +44,10 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
     p.add_argument("--host-budget", action="store_true")
     p.add_argument("--budget-per-round", type=int, default=5000)
     p.add_argument("--salt-buckets", type=int, default=32)
-    p.add_argument("--bloom-prefilter", action="store_true")
-    p.add_argument("--seen-filter", default="", choices=["", "bloom", "cuckoo"],
-                   help="URL-seen prefilter: bloom rebuilds per round, "
-                        "cuckoo is maintained incrementally (insert-the-delta)")
+    p.add_argument("--seen-filter", default="", choices=["", "cuckoo"],
+                   help="URL-seen prefilter in front of the exact join: "
+                        "'' = exact join only; cuckoo = a partitioned cuckoo "
+                        "filter fed each round's visited delta")
     p.add_argument("--ordering-shards", type=int, default=1,
                    help="mega-source escape hatch: >1 shards per-source "
                         "sequencing windows (drops intra-source total order; "
@@ -290,9 +290,7 @@ def main(argv: list[str] | None = None) -> None:
         check_robots=args.check_robots,
         use_host_budget=args.host_budget,
         salt_buckets=args.salt_buckets,
-        bloom_prefilter=args.bloom_prefilter,
         seen_filter=args.seen_filter,
-        shuffle_partitions=args.shuffle_partitions,
         ordering_shards=args.ordering_shards,
         trap_cap=args.trap_cap,
         trap_threshold=args.trap_threshold,

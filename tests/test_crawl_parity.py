@@ -82,14 +82,6 @@ def test_crawl_parity_restriction_levels(spark):
         _compare(_spark_result(spark, corpus, cfg), _oracle_result(corpus, ocfg))
 
 
-def test_crawl_parity_bloom_prefilter(spark):
-    """Bloom-accelerated URL-seen path must be result-identical."""
-    corpus = small_corpus(CorpusSpec(n_hosts=2, pages_per_host=12))
-    cfg = CrawlConfig(max_depth=3, max_rounds=8, bloom_prefilter=True)
-    ocfg = O.OracleConfig(max_depth=3, max_rounds=8)
-    _compare(_spark_result(spark, corpus, cfg), _oracle_result(corpus, ocfg))
-
-
 def test_crawl_parity_cuckoo_prefilter(spark):
     """Incrementally-maintained cuckoo URL-seen path must be
     result-identical (build once, insert each round's visited delta)."""
@@ -99,24 +91,37 @@ def test_crawl_parity_cuckoo_prefilter(spark):
     _compare(_spark_result(spark, corpus, cfg), _oracle_result(corpus, ocfg))
 
 
-def test_cuckoo_release_then_refetch(spark, tmp_path):
-    """End-to-end re-crawl through CrawlEngine (r2 verdict item 10):
-    run1 crawls and populates the incremental cuckoo filter; run2
-    chained on run1's seen set fetches NOTHING new (every link is
-    seen); after release_seen() on the re-crawl-eligible source, run3
-    fetches that source's URLs again — the delete→refetch path.
-    work_dir is SET so the chained prior state must survive the
-    delta-dir checkpoint commits across rounds (regression: the
-    work_dir scan used to drop the prior union after round 1)."""
-    from pyspark.sql import functions as F
+def test_unknown_seen_filter_mode_raises(spark):
+    """The exact join alone ("") and the cuckoo prefilter are the only
+    URL-seen modes; any other name, the removed "bloom" included, is
+    refused when the engine is built."""
+    dfs = corpus_to_spark(spark, small_corpus(CorpusSpec(n_hosts=1, pages_per_host=2)))
+    for mode in ("bloom", "exact"):
+        with pytest.raises(ValueError, match="seen_filter"):
+            CrawlEngine(spark, dfs["documents"], cfg=CrawlConfig(seen_filter=mode))
 
+
+@pytest.mark.parametrize("seen_filter", ["", "cuckoo"], ids=["exact", "cuckoo"])
+@pytest.mark.parametrize("with_work_dir", [True, False], ids=["work_dir", "local"])
+def test_cuckoo_release_then_refetch(spark, tmp_path, with_work_dir, seen_filter):
+    """End-to-end re-crawl through CrawlEngine (r2 verdict item 10):
+    run1 crawls (and, in cuckoo mode, populates the incremental
+    filter); run2 chained on run1's seen set fetches NOTHING new (every
+    link is seen); after release_seen() on the re-crawl-eligible
+    source, run3 fetches that source's URLs again — the
+    delete→refetch path. With work_dir set the chained prior state
+    must survive the delta-dir checkpoint commits across rounds
+    (regression: the work_dir scan used to drop the prior union after
+    round 1); without it, the in-memory commits must keep it too."""
     corpus = small_corpus(CorpusSpec(n_hosts=2, pages_per_host=10))
     dfs = corpus_to_spark(spark, corpus)
-    cfg = CrawlConfig(max_depth=2, max_rounds=6, seen_filter="cuckoo")
-    eng = CrawlEngine(spark, dfs["documents"], cfg=cfg, work_dir=str(tmp_path / "state"))
+    cfg = CrawlConfig(max_depth=2, max_rounds=6, seen_filter=seen_filter)
+    work_dir = str(tmp_path / "state") if with_work_dir else None
+    eng = CrawlEngine(spark, dfs["documents"], cfg=cfg, work_dir=work_dir)
 
     res1 = eng.run(dfs["seeds"], run_id="rc1")
-    assert eng._cuckoo is not None  # filter built + incrementally fed
+    # the filter exists (built and incrementally fed) only in cuckoo mode
+    assert (eng._cuckoo is not None) == (seen_filter == "cuckoo")
     pages1 = {
         (r["source_id"], r["url"]) for r in res1.pages.collect() if r["depth"] > 0
     }

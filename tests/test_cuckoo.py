@@ -1,5 +1,5 @@
 """Partitioned cuckoo filter: no false negatives, tiny FPR, exact
-dedup identity, and the deletion path bloom cannot provide."""
+dedup identity, and the deletion path a bloom filter cannot provide."""
 
 from __future__ import annotations
 

@@ -132,6 +132,29 @@ def test_verify_pairs_jaccard_kills_false_positives(spark):
     assert {(a, b) for a, b, _ in got} == {(1, 2)}
 
 
+def test_verify_pairs_jaccard_drops_zero_overlap_pairs(spark):
+    """A candidate pair with no shared shingle is not a near-duplicate
+    at any threshold: with threshold 0 only the overlapping pair comes
+    back, never a zero-overlap pair at jaccard 0."""
+    from thecrowler_spark.operators.dedup import verify_pairs_jaccard
+
+    docs = spark.createDataFrame(
+        [
+            (1, "one two three four five six"),
+            (2, "one two three four seven eight"),
+            (3, "nine ten eleven twelve thirteen fourteen"),
+        ],
+        "doc_id long, text string",
+    )
+    cand = spark.createDataFrame([(1, 2), (1, 3), (2, 3)], "id_a long, id_b long")
+    got = {
+        (r["id_a"], r["id_b"]): r["jaccard"]
+        for r in verify_pairs_jaccard(docs, cand, threshold=0.0).collect()
+    }
+    # docs 1 and 2 share 2 of 6 distinct 3-shingles
+    assert got == {(1, 2): round(2 / 6, 6)}
+
+
 def test_winnow_pairs_planted_shared_run(spark):
     """Winnowing guarantee: two docs sharing a ≥ w+k−1-token run share
     ≥1 fingerprint → the pair is found; unrelated docs are not paired;

@@ -174,3 +174,35 @@ def test_selector_signatures_planted(spark):
     v = got[(2, "Vue")]
     assert v.confidence == 76.0 and v.matched_patterns == "*"
     assert not any(d == 3 for d, _ in got)
+
+
+def test_null_rule_confidence_contributes_nothing(spark):
+    """A rule row whose confidence is NULL compiles (no TypeError at plan
+    build) and adds nothing to its technology's confidence sum: a
+    technology matched only by NULL-confidence rules, positive or
+    header-absent, is not detected, and one with a weighted rule too
+    keeps exactly that rule's confidence."""
+    pages = spark.createDataFrame(
+        [(1, "https://a.example.com/", "alpha beta gamma", {}, [])],
+        "doc_id long, url string, body string, headers map<string,string>, "
+        "metas array<struct<name:string,content:string>>",
+    )
+    rules = tech_rules_df(
+        spark,
+        [
+            {"object_name": "A", "kind": "body", "key": "*", "pattern": "alpha",
+             "confidence": 8.0},
+            {"object_name": "A", "kind": "body", "key": "*", "pattern": "beta",
+             "confidence": None},
+            {"object_name": "B", "kind": "body", "key": "*", "pattern": "gamma",
+             "confidence": None},
+            {"object_name": "C", "kind": "header_absent", "key": "x-frame-options",
+             "pattern": "!*", "confidence": None},
+        ],
+    )
+    got = {
+        r.entity_name: (r.confidence, r.matched_patterns)
+        for r in detect_technologies(pages, rules).collect()
+    }
+    # A: x = 8 → 40 + (8-5)/5*60 = 76; B and C have no confidence at all
+    assert got == {"A": (76.0, "alpha")}

@@ -13,7 +13,7 @@ from thecrowler_spark.operators.frontier import CrawlConfig, CrawlEngine
 from thecrowler_spark.sources.corpus import CorpusSpec, corpus_to_spark, small_corpus
 from tests import oracle as O
 
-MODES = ["", "bloom", "cuckoo"]
+MODES = ["", "cuckoo"]
 
 
 def _round_deltas(spark, work_dir: str, run_id: str, name: str) -> dict[int, list[tuple]]:

@@ -4,7 +4,7 @@ A brand-new engine (NOT a port): URL frontier + fetch scheduler over
 lakehouse tables of interleaved text+media documents, with
 
 - a vectorized URL kernel (pandas/Arrow UDFs + JVM builtins, no per-row Python),
-- a partitioned bloom URL-seen filter + exact anti-join dedup,
+- a partitioned cuckoo URL-seen prefilter + exact anti-join dedup,
 - per-host politeness budgets and robots.txt enforcement (window-rank, not sleeps),
 - a salted, explicitly-repartitioned priority-queue frontier,
 - span-sequence parsing (kind, text, media_ref, order) matching the reference

@@ -1,33 +1,46 @@
-"""Partitioned cuckoo filter for the URL-seen set (custom piece #1b,
-SURVEY.md §4 — the deletion-capable sibling of :mod:`.bloom`).
+"""Partitioned cuckoo filter for the URL-seen set (custom piece #1,
+SURVEY.md §4): the one optional prefilter in front of the exact
+URL-seen join.
 
-Same scale shape as the bloom prefilter: the seen set is summarized
-into per-bucket blobs (bucket = ``pmod(xxhash64(norm_url),
-n_buckets)``), candidates that probe **negative are definitely
-unseen**, positives still get the exact anti-join. The cuckoo variant
-adds what bloom structurally cannot: **deletion** — when a source
-becomes re-crawl-eligible (update_sources interval gates,
-postgresql-setup.pgsql:2864-2884) its URLs can be *removed* from the
-seen summary instead of rebuilding the whole filter.
+At 10^10 seen-URLs, joining every round's candidates against the full
+seen table shuffles terabytes. The filter summarizes the seen set into
+per-bucket blobs (bucket = ``pmod(xxhash64(key), n_buckets)``):
+candidates that probe **negative are definitely unseen** and skip the
+exact join; positives (seen + false positives) still get it, so the
+result is identical to the plain anti-join. The filter is maintained
+incrementally — each crawl round inserts only its visited delta — and
+supports **deletion**: when a source becomes re-crawl-eligible
+(update_sources interval gates, postgresql-setup.pgsql:2864-2884) its
+URLs are *removed* from the summary instead of rebuilding the filter.
 
 Design (partial-key cuckoo, Fan et al. 2014, public algorithm):
+- key hashing happens JVM-side (``xxhash64`` twice → h1, h2), so the
+  Python side touches only int64 arrays — vectorized numpy over Arrow
+  batches, no per-row Python;
 - 16-bit fingerprints, ``slots`` per table bucket, two candidate
   buckets i1 = h1 bits, i2 = i1 XOR mix(fp) over a power-of-two table;
 - tables are sized to ≤50% load with 2×4 choices, which makes eviction
   chains unnecessary: insert tries i1 then i2, the (vanishingly rare)
   double-full case goes to a per-partition stash that probes exactly;
-- build/probe are vectorized numpy over Arrow batches exactly like
-  bloom.py (insertion resolves within-bucket contention with a
-  sort-rank pass, not per-item Python); deletion processes the delta
-  key set per partition — the rare path by construction;
+- build is ``applyInPandas`` per bucket (one blob per bucket → bounded
+  memory per task); probe/insert/delete are ``cogroup().applyInPandas``
+  so each bucket's keys meet exactly their bucket's blob. Insertion
+  resolves within-bucket contention with a sort-rank pass, not
+  per-item Python; deletion processes the delta key set per partition
+  — the rare path by construction;
 - duplicate inserts keep duplicate fingerprint copies (multiset), so
   deleting key X never creates a false negative for a *different*
   still-present key that collides with X.
 
 Contract: probe False ⇒ key not in the (inserted − deleted) multiset.
 Probe True may be a false positive (~2·slots/2^16 ≈ 0.02%), so the
-exact join stays authoritative, mirroring the bloom contract. Only
-keys actually inserted may be deleted (standard cuckoo rule).
+exact join stays authoritative. Only keys actually inserted may be
+deleted (standard cuckoo rule).
+
+Reference analog: ``visitedLinks`` map + ``IsURLKnown`` EXISTS probe
+(reference ``pkg/crawler/crawler.go:2223-2228``,
+``pkg/database/queries.go:74-88``) — correct at one
+process's scale, impossible at 10^10; this is the scale-out design.
 """
 
 from __future__ import annotations
@@ -37,13 +50,18 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .bloom import _with_hashes  # same key-hash contract as the bloom sibling
-
+_H2_SALT = 0x9E3779B9
 _FP_MIX = np.uint64(0x5BD1E995)
 CUCKOO_SCHEMA = (
     "bucket long, table binary, m long, slots int, stash binary, n_keys long,"
     " n_buckets int"
 )
+
+
+def _with_hashes(df: DataFrame, key_col: str, n_buckets: int) -> DataFrame:
+    return df.withColumn("_h1", F.xxhash64(F.col(key_col))).withColumn(
+        "_h2", F.xxhash64(F.col(key_col), F.lit(_H2_SALT))
+    ).withColumn("_bucket", F.pmod(F.col("_h1"), F.lit(n_buckets)))
 
 
 def _check_buckets(blob_pdf: pd.DataFrame, n_buckets: int) -> None:
@@ -252,7 +270,7 @@ def delete_cuckoo(
     n_buckets: int = 64,
 ) -> DataFrame:
     """Remove one fingerprint copy per key (re-crawl eligibility path —
-    the operation bloom filters cannot support). Keys must have been
+    the operation a bloom filter cannot support). Keys must have been
     inserted. Returns the updated filter DataFrame."""
 
     cols = ["bucket", "table", "m", "slots", "stash", "n_keys", "n_buckets"]
@@ -305,10 +323,13 @@ def dedup_with_cuckoo(
     cuckoo: DataFrame | None = None,
 ) -> DataFrame:
     """candidates ∖ seen, cuckoo-accelerated; result set ≡ plain
-    left_anti (negatives skip the exact join, positives verified)."""
-    from .bloom import exact_after_prefilter
-
+    left_anti: negatives are definitely unseen and bypass the join,
+    positives get the authoritative left_anti so false positives never
+    drop a URL."""
     if cuckoo is None:
         cuckoo = build_cuckoo(seen, key_col, n_buckets)
     probed = probe_cuckoo(candidates, cuckoo, key_col, n_buckets)
-    return exact_after_prefilter(probed, seen, key_col, "cuckoo_maybe")
+    negatives = probed.filter(~F.col("cuckoo_maybe")).drop("cuckoo_maybe")
+    positives = probed.filter(F.col("cuckoo_maybe")).drop("cuckoo_maybe")
+    checked = positives.join(seen.select(key_col).dropDuplicates(), [key_col], "left_anti")
+    return negatives.unionByName(checked)

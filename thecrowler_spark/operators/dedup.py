@@ -280,7 +280,7 @@ def verify_pairs_jaccard(
     be near-duplicates (with few hashes per band the collision carries
     almost no Jaccard signal). This computes TRUE shingle-set Jaccard
     for ONLY the candidate pairs. Returns (id_a, id_b, jaccard) for
-    pairs with jaccard >= threshold.
+    pairs that share at least one shingle and have jaccard >= threshold.
 
     r6 shape (guide §2.4 "remove shuffles outright"): the per-doc
     DISTINCT shingle set stays an ARRAY — |∩| is
@@ -296,10 +296,11 @@ def verify_pairs_jaccard(
     pair side: O(pairs × avg_shingles) BYTES but no per-shingle rows,
     no string shuffle keys, no pair-key re-aggregation. Values are
     EXACTLY the old ones: array_intersect of distinct sets ≡ the
-    shared-distinct-shingle count, sizes ≡ the distinct counts, and
-    docs whose shingle set is empty (zero tokens) are excluded from the
-    table exactly as the explode form excluded them (their pairs emit
-    nothing, matching the old inner-join behavior for ANY threshold).
+    shared-distinct-shingle count, sizes ≡ the distinct counts. A pair
+    with no shared shingle is dropped before the threshold filter, as
+    the explode form's inner join on the shared-count aggregate dropped
+    it, so a threshold <= 0 never admits a zero-overlap pair; docs whose
+    shingle set is empty (zero tokens) are excluded from the table.
 
     Cost is O(pairs × avg_shingles), never all-pairs. Mirrors the
     verification step of classic MinHash-LSH dedup; scale shape: two
@@ -329,6 +330,7 @@ def verify_pairs_jaccard(
         pairs.join(a, "id_a")
         .join(b, "id_b")
         .withColumn("shared", shared)
+        .filter(F.col("shared") > 0)
         .withColumn(
             "jaccard",
             F.round(F.col("shared") / (F.col("na") + F.col("nb") - F.col("shared")), 6),

@@ -152,12 +152,14 @@ def confidence_expr(
 
 
 def tech_rules_df(spark: SparkSession, rules: list[dict] | None = None) -> DataFrame:
-    """Rules as a (broadcastable) DataFrame."""
+    """Rules as a (broadcastable) DataFrame; a None confidence stays
+    NULL (:func:`detect_technologies` then skips the rule)."""
     rules = rules if rules is not None else DEFAULT_TECH_RULES
     return spark.createDataFrame(
         [
             (r["object_name"], r["kind"], r["key"], r.get("attribute", ""),
-             r["pattern"], float(r["confidence"]), list(r.get("implies", ())))
+             r["pattern"], None if r["confidence"] is None else float(r["confidence"]),
+             list(r.get("implies", ())))
             for r in rules
         ],
         "object_name string, kind string, key string, attribute string, "
@@ -210,13 +212,12 @@ def detect_technologies(
 
     _EV = "array<struct<object_name:string,_kind:string,_pat:string,_conf:double>>"
 
-    def ev_struct(name: str, kind: str, pat: str, conf) -> F.Column:
-        c = conf if isinstance(conf, F.Column) else F.lit(float(conf))
+    def ev_struct(name: str, kind: str, pat: str, conf: float) -> F.Column:
         return F.struct(
             F.lit(name).alias("object_name"),
             F.lit(kind).alias("_kind"),
             F.lit(pat).alias("_pat"),
-            c.alias("_conf"),
+            F.lit(conf).alias("_conf"),
         )
 
     def cond_leg(cond, name, kind, pat, conf):
@@ -231,6 +232,11 @@ def detect_technologies(
         name, kind, key, pat, conf = (
             r["object_name"], r["kind"], r["key"], r["pattern"], r["confidence"]
         )
+        if conf is None:
+            # a NULL confidence contributes nothing: no event, so no
+            # confidence, pattern or entity type from this rule
+            continue
+        conf = float(conf)
         if kind == "body":
             legs.append(cond_leg(
                 F.regexp_like(F.col("_body"), F.lit(pat)), name, "body", pat, conf))
@@ -248,7 +254,7 @@ def detect_technologies(
             # (detection.go:640-645)
             legs.append(cond_leg(
                 F.element_at(F.col("headers"), F.lit(key)).isNull(),
-                name, "header_absent", key, -float(conf)))
+                name, "header_absent", key, -conf))
         elif kind == "meta":
             # one event PER matching meta occurrence (confidence
             # accumulates with occurrence multiplicity, patterns dedup)

@@ -82,16 +82,14 @@ class CrawlConfig:
     user_url_patterns: tuple[str, ...] = ()
     max_rounds: int = 50  # safety net for max_depth=0
     salt_buckets: int = 16
-    bloom_prefilter: bool = False
-    #: URL-seen prefilter mode: "" honors bloom_prefilter; "bloom"
-    #: rebuilds a bloom from the visited set each round (stateless,
-    #: O(seen) rebuild); "cuckoo" maintains a partial-key cuckoo filter
+    #: URL-seen prefilter mode: "" = the exact join alone; "cuckoo"
+    #: puts a partial-key cuckoo filter in front of it, maintained
     #: INCREMENTALLY — built once, then each round inserts only the
     #: visited DELTA (O(delta) maintenance, the 10^10-seen-URLs path).
-    #: Both are never authoritative: positives always get the exact
-    #: join, so the final seen-set is identical in every mode (tested).
+    #: The filter is never authoritative: positives always get the
+    #: exact join, so the final seen-set is identical in both modes
+    #: (tested).
     seen_filter: str = ""
-    shuffle_partitions: int | None = None
     #: mega-source escape hatch. 1 (default) = exact reference ordering
     #: parity: per-source sequencing windows serialize each source onto
     #: one task (parallel across sources). >1 = drop intra-source TOTAL
@@ -160,6 +158,14 @@ def _observed(df: DataFrame, *metrics) -> tuple[DataFrame, Observation]:
 
 def _obs_int(obs: Observation) -> dict[str, int]:
     return {k: int(v or 0) for k, v in obs.get.items()}
+
+
+def _seen_key() -> F.Column:
+    """``_skey`` = ``source_id\x00norm_url``: the per-source seen key
+    the cuckoo filter hashes."""
+    return F.concat_ws(
+        "\x00", F.col("source_id").cast("string"), F.col("norm_url")
+    ).alias("_skey")
 
 
 @dataclass
@@ -461,11 +467,13 @@ class CrawlEngine:
         self.robots = robots if (robots is not None and self.cfg.check_robots) else None
         self.budgets = budgets if (budgets is not None and self.cfg.use_host_budget) else None
         self.work_dir = work_dir
-        mode = self.cfg.seen_filter or ("bloom" if self.cfg.bloom_prefilter else "")
-        if mode not in ("", "bloom", "cuckoo"):
-            raise ValueError(f"unknown seen_filter mode: {mode!r}")
-        self._seen_mode = mode
+        if self.cfg.seen_filter not in ("", "cuckoo"):
+            raise ValueError(f"unknown seen_filter mode: {self.cfg.seen_filter!r}")
         self._cuckoo: DataFrame | None = None  # incremental blobs (cuckoo mode)
+        #: seen state of the current run: its committed visited deltas
+        #: and the chained prior-run set (``run(initial_visited=...)``)
+        self._run_seen: DataFrame | None = None
+        self._prior_seen: DataFrame | None = None
         #: DUST valve (operators/dust.py): mined (host, param) rules —
         #: e.g. from a prior run's fetch log via dust_rules() — applied
         #: to the URL-SEEN DEDUP KEY only (fetch url untouched), the
@@ -590,30 +598,28 @@ class CrawlEngine:
             "priority",
         ).persist()
 
-        prior_vis = (
+        self._prior_seen = (
             initial_visited.select("source_id", "norm_url")
             if initial_visited is not None
             else None
         )
+        self._run_seen = None
 
         if resume:
             state = self._load_latest(run_id)
             if state is not None:
-                vis = state["visited"]
-                if prior_vis is not None:
-                    # the run's checkpoints hold only ITS deltas — the
-                    # caller re-supplies the chained prior state on resume
-                    vis = vis.unionByName(prior_vis)
+                # the run's checkpoints hold only ITS deltas — the caller
+                # re-supplies the chained prior state on resume
+                self._run_seen = state["visited"]
                 return self._run_rounds(
                     run_id,
                     state["pages"],
-                    vis,
+                    self._commit_visited(run_id, state["current_depth"]),
                     state["frontier"],
                     state["counters"],
                     state["current_depth"],
                     state["lineage"],
                     deferred=state["deferred"],
-                    prior_visited=prior_vis,
                 )
 
         # ---- depth 0: CrawlInitialURL (web.go:912-993) ----
@@ -689,9 +695,9 @@ class CrawlEngine:
         seed_vis = self._with_seen_norm(seed_ok, "source_url").select(
             "source_id", "norm_url"
         )
-        if prior_vis is not None:
+        if self._prior_seen is not None:
             # this run's depth-0 DELTA: seed keys not already seen
-            visited = seed_vis.join(prior_vis, ["source_id", "norm_url"], "left_anti")
+            visited = seed_vis.join(self._prior_seen, ["source_id", "norm_url"], "left_anti")
         else:
             visited = seed_vis
         # counters live as a small DataFrame for the whole crawl — never
@@ -713,31 +719,8 @@ class CrawlEngine:
         )
 
         # depth-0 state is the base delta of the append-only page/visited logs
-        pages = self._ckpt_delta(pages.limit(0), pages, run_id, 0, "pages")
-        if self._seen_mode == "cuckoo" and self._cuckoo is not None:
-            # long-lived filter reused across runs: the depth-0 delta
-            # (newly-claimed sources' seed keys) must enter the filter,
-            # or a later link back to a seed URL would probe "definitely
-            # unseen" and skip the exact check (false negative)
-            from .cuckoo import insert_cuckoo
-
-            seed_keys = visited.select(
-                F.concat_ws(
-                    "\x00", F.col("source_id").cast("string"), F.col("norm_url")
-                ).alias("_skey")
-            )
-            self._cuckoo = self._ckpt(
-                insert_cuckoo(
-                    self._cuckoo, seed_keys, key_col="_skey",
-                    n_buckets=self.cfg.salt_buckets,
-                ),
-                run_id, 0, "cuckoo",
-            )
-        visited = self._ckpt_delta(visited.limit(0), visited, run_id, 0, "visited")
-        if prior_vis is not None:
-            # live state = this run's committed deltas ∪ the caller's
-            # prior-run state (stored by ITS run's checkpoints)
-            visited = visited.unionByName(prior_vis)
+        pages = self._ckpt_delta(None, pages, run_id, 0, "pages")
+        visited = self._commit_visited(run_id, 0, visited)
         # the round's driver-side numbers are observed on its commits
         frontier, frontier_obs = _observed(frontier, F.count(F.lit(1)).alias("rows"))
         frontier = self._ckpt(frontier, run_id, 0, "frontier")
@@ -755,7 +738,7 @@ class CrawlEngine:
         self._write_manifest(run_id, 0, 0)
         return self._run_rounds(
             run_id, pages, visited, frontier, counters, 0, lineage,
-            prior_visited=prior_vis, n_frontier=_obs_int(frontier_obs)["rows"],
+            n_frontier=_obs_int(frontier_obs)["rows"],
         )
 
     def release_seen(self, visited: DataFrame, eligible: DataFrame) -> DataFrame:
@@ -776,14 +759,10 @@ class CrawlEngine:
         output of :func:`claim_sources` with ``regular_crawling`` set.
         """
         el = F.broadcast(eligible.select("source_id").dropDuplicates())
-        if self._seen_mode == "cuckoo" and self._cuckoo is not None:
+        if self._cuckoo is not None:
             from .cuckoo import delete_cuckoo
 
-            released_keys = visited.join(el, "source_id").select(
-                F.concat_ws(
-                    "\x00", F.col("source_id").cast("string"), F.col("norm_url")
-                ).alias("_skey")
-            )
+            released_keys = visited.join(el, "source_id").select(_seen_key())
             new_ck = delete_cuckoo(
                 self._cuckoo, released_keys, key_col="_skey",
                 n_buckets=self.cfg.salt_buckets,
@@ -793,6 +772,36 @@ class CrawlEngine:
             self._cuckoo = new_ck
             old.unpersist()
         return visited.join(el, "source_id", "left_anti")
+
+    def _commit_visited(
+        self, run_id: str, rnd: int, delta: DataFrame | None = None
+    ) -> DataFrame:
+        """Commit round ``rnd``'s visited ``delta`` and return the live
+        seen set: this run's committed deltas ∪ the chained prior-run
+        set (which its own run's checkpoints store — never re-committed
+        here). The delta also enters the cuckoo filter when one exists:
+        a filter reused across runs must hold every key the exact set
+        holds, or a later link back to it would probe "definitely
+        unseen" and skip the exact check. ``delta=None`` commits
+        nothing (a resumed run's deltas are already committed)."""
+        if delta is not None:
+            if self._cuckoo is not None:
+                # incremental maintenance: insert only the delta
+                # (O(delta)); checkpoint the small blob table so the
+                # plan never chains across rounds
+                from .cuckoo import insert_cuckoo
+
+                self._cuckoo = self._ckpt(
+                    insert_cuckoo(
+                        self._cuckoo, delta.select(_seen_key()), key_col="_skey",
+                        n_buckets=self.cfg.salt_buckets,
+                    ),
+                    run_id, rnd, "cuckoo",
+                )
+            self._run_seen = self._ckpt_delta(self._run_seen, delta, run_id, rnd, "visited")
+        if self._prior_seen is None:
+            return self._run_seen
+        return self._run_seen.unionByName(self._prior_seen)
 
     def _run_rounds(
         self,
@@ -804,7 +813,6 @@ class CrawlEngine:
         start_depth: int,
         lineage: list[dict[str, Any]],
         deferred: DataFrame | None = None,
-        prior_visited: DataFrame | None = None,
         n_frontier: int | None = None,
     ) -> CrawlResult:
         cfg = self.cfg
@@ -866,12 +874,7 @@ class CrawlEngine:
                 F.col("url_link").alias("url"),
             )
             pages = self._ckpt_delta(pages, new_pages, run_id, depth, "pages")
-            visited = self._ckpt_delta(visited, visited_delta, run_id, depth, "visited")
-            if prior_visited is not None and self.work_dir:
-                # work_dir commits return ONLY this run's delta-dir scan;
-                # re-attach the chained prior-run state (the no-work_dir
-                # branch unions onto cur_state, which already has it)
-                visited = visited.unionByName(prior_visited)
+            visited = self._commit_visited(run_id, depth, visited_delta)
 
             stats = rt.groupBy("source_id").agg(
                 *[
@@ -885,24 +888,6 @@ class CrawlEngine:
             )
             frontier = self._ckpt(frontier, run_id, depth, "frontier")
             n_frontier = _obs_int(frontier_obs)["rows"]
-            if self._seen_mode == "cuckoo" and self._cuckoo is not None:
-                # incremental maintenance: insert only this round's
-                # visited delta (O(delta)); checkpoint the small blob
-                # table so the plan never chains across rounds
-                from .cuckoo import insert_cuckoo
-
-                delta_keys = visited_delta.select(
-                    F.concat_ws(
-                        "\x00", F.col("source_id").cast("string"), F.col("norm_url")
-                    ).alias("_skey")
-                )
-                self._cuckoo = self._ckpt(
-                    insert_cuckoo(
-                        self._cuckoo, delta_keys, key_col="_skey",
-                        n_buckets=self.cfg.salt_buckets,
-                    ),
-                    run_id, depth, "cuckoo",
-                )
             if self.budgets is not None:
                 # deferred rows are next-round input state — commit them
                 # like the frontier so kill-and-resume replays them too
@@ -1034,41 +1019,29 @@ class CrawlEngine:
         lv = lv.withColumn("is_skip", F.col("is_skip") | F.col("robots_blocked"))
 
         # visited-set probe: equi anti-join semantics via left join marker.
-        # With a prefilter on, filter-negative rows skip the exact join
-        # (definitely unseen); positives still get the exact check, so the
-        # final seen-set is identical in every mode (bloom.py/cuckoo.py
-        # contract). Bloom rebuilds from the full visited set each round;
-        # cuckoo is maintained incrementally (insert-the-delta in
-        # _run_rounds) — at 10^10 seen URLs that drops the per-round
-        # O(seen) rebuild scan to O(delta).
-        if self._seen_mode:
-            skey = F.concat_ws("\x00", F.col("source_id").cast("string"), F.col("norm_url"))
-            vis_keyed = visited.select(skey.alias("_skey"))
-            if self._seen_mode == "bloom":
-                from .bloom import build_bloom, probe_bloom
+        # With the cuckoo prefilter on, filter-negative rows skip the
+        # exact join (definitely unseen); positives still get the exact
+        # check, so the final seen-set is identical in both modes. The
+        # filter is built once, then fed each committed visited delta
+        # (_commit_visited) — at 10^10 seen URLs an O(delta) insert
+        # instead of an O(seen) rebuild per round.
+        if cfg.seen_filter:
+            from .cuckoo import build_cuckoo, probe_cuckoo
 
-                filt = build_bloom(vis_keyed, key_col="_skey", n_buckets=cfg.salt_buckets)
-                probed = probe_bloom(
-                    lv.withColumn("_skey", skey), filt, key_col="_skey", n_buckets=cfg.salt_buckets
-                )
-                flag = "bloom_maybe"
-            else:
-                from .cuckoo import build_cuckoo, probe_cuckoo
-
-                if self._cuckoo is None:
-                    self._cuckoo = build_cuckoo(
-                        vis_keyed, key_col="_skey", n_buckets=cfg.salt_buckets
-                    ).persist()
-                probed = probe_cuckoo(
-                    lv.withColumn("_skey", skey),
-                    self._cuckoo,
-                    key_col="_skey",
-                    n_buckets=cfg.salt_buckets,
-                )
-                flag = "cuckoo_maybe"
-            neg = probed.filter(~F.col(flag)).withColumn("_seen", F.lit(False))
+            vis_keyed = visited.select(_seen_key())
+            if self._cuckoo is None:
+                self._cuckoo = build_cuckoo(
+                    vis_keyed, key_col="_skey", n_buckets=cfg.salt_buckets
+                ).persist()
+            probed = probe_cuckoo(
+                lv.select("*", _seen_key()),
+                self._cuckoo,
+                key_col="_skey",
+                n_buckets=cfg.salt_buckets,
+            )
+            neg = probed.filter(~F.col("cuckoo_maybe")).withColumn("_seen", F.lit(False))
             pos = (
-                probed.filter(F.col(flag))
+                probed.filter(F.col("cuckoo_maybe"))
                 .join(
                     vis_keyed.withColumn("_vseen", F.lit(True)),
                     ["_skey"],
@@ -1077,7 +1050,7 @@ class CrawlEngine:
                 .withColumn("_seen", F.coalesce(F.col("_vseen"), F.lit(False)))
                 .drop("_vseen")
             )
-            lv = neg.unionByName(pos).drop(flag, "_skey")
+            lv = neg.unionByName(pos).drop("cuckoo_maybe", "_skey")
         else:
             lv = lv.join(
                 visited.withColumn("_seen", F.lit(True)),
@@ -1310,16 +1283,18 @@ class CrawlEngine:
         return dirs
 
     def _ckpt_delta(
-        self, cur_state: DataFrame, delta: DataFrame, run_id: str, rnd: int, name: str
+        self, cur_state: DataFrame | None, delta: DataFrame, run_id: str, rnd: int, name: str
     ) -> DataFrame:
         """Append-only state commit: write ONLY this round's delta
         (Iceberg-append analog); the live state becomes a union-scan
         over all committed deltas ≤ rnd — one scan node, lineage cut,
         per-round write cost O(delta) instead of O(total state).
+        ``cur_state`` is None for the run's first delta.
         """
         with self._phase(run_id, rnd, name):
             if not self.work_dir:
-                return cur_state.unionByName(delta).localCheckpoint(eager=True)
+                state = delta if cur_state is None else cur_state.unionByName(delta)
+                return state.localCheckpoint(eager=True)
             path = f"{self.work_dir}/{run_id}/r{rnd:04d}/{name}_delta"
             delta.write.mode("overwrite").option("compression", STATE_CODEC).parquet(path)
             return self.spark.read.schema(delta.schema).parquet(
