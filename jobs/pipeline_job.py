@@ -30,8 +30,7 @@ prep chain, each stage an operator from this repo, all JVM-side:
          (Xie et al. 2023)
     6. language ID + stats(script pre-classifier + trigram-profile
                            scoring, operators/langid — the whatlanggo-
-                           shaped quality path; --langid marker keeps
-                           the inline 24-marker argmax fast path)
+                           shaped quality path)
     7. split + pack       (deterministic hash split; token-budget packs)
 
 Run:
@@ -45,6 +44,14 @@ Run:
 Outputs under --output: documents/ (curated, split + pack columns),
 dropped/ (doc_id + reason — auditable filtering, never silent),
 stats/ (per-language accounting), manifest.json (stage row counts).
+
+Every stage has one shape: it builds a judged table — its input rows
+plus a ``reason`` column, NULL on the rows it keeps — and one step
+function persists it, materializes it with one action (the stage's
+kept/dropped counts are observed on that action), keeps its small
+(doc_id, reason) drop rows and passes the kept rows on, releasing the
+previous stage's table. Its Spark jobs are named
+``pipeline/<batch_tag>/<stage>`` in ``spark.job.description``.
 
 --state DIR turns on incremental (continuous-feed) mode: LakeTable
 snapshots carry seen content hashes (cross-batch exact dedup), full
@@ -178,10 +185,6 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
                    help="number of docs DSIR keeps (top-k by hashed n-gram "
                         "log-ratio score); the rest drop as 'dsir_unselected'")
     p.add_argument("--dsir-buckets", type=int, default=1024)
-    p.add_argument("--langid", choices=("trigram", "marker"), default="trigram",
-                   help="language-ID stage: trigram-profile scoring "
-                        "(operators/langid, the quality path) or the inline "
-                        "24-marker argmax column expression")
     p.add_argument("--shuffle-partitions", type=int, default=None)
     args = p.parse_args(argv)
     if args.anchor_corpus and not args.links:
@@ -211,12 +214,15 @@ def run_pipeline(spark, args, docs_df=None) -> dict:
     """Run the full stage chain. ``docs_df`` (doc_id, text) overrides
     ``--input`` — the hook streaming ingest uses to feed a micro-batch
     directly (streaming/curation.py) without a detour through disk."""
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
     from thecrowler_spark.functions import text as TX
     from thecrowler_spark.operators import dedup as DD
+    from thecrowler_spark.operators.langid import detect_language
     from thecrowler_spark.operators.sampling import assign_split, pack_documents
     from thecrowler_spark.operators.terms import quality_filter_verdict
+    from thecrowler_spark.session import job_description
 
     src = docs_df if docs_df is not None else spark.read.parquet(args.input)
     needs_source = bool(getattr(args, "mixture", None)) or getattr(args, "source_rollup", False)
@@ -227,9 +233,8 @@ def run_pipeline(spark, args, docs_df=None) -> dict:
         # slim (doc_id, source) dimension — read once per consumer stage
         sources_dim = src.select("doc_id", "source").persist()
     docs = src.select("doc_id", "text").persist()
-    manifest: dict = {"input_rows": docs.count(), "stages": {}}
-    dropped_parts = []
-    cached = [docs]
+    # input_rows is the row count of the first stage's judged table
+    manifest: dict = {"input_rows": None, "stages": {}}
 
     # wall-seconds between stage-count actions — optimization telemetry
     # (guide §1: measure first). Extra manifest key; consumers that read
@@ -240,58 +245,6 @@ def run_pipeline(spark, args, docs_df=None) -> dict:
         now = time.time()
         manifest.setdefault("stage_secs", {})[name] = round(now - _last_mark[0], 3)
         _last_mark[0] = now
-
-    def stage(df):
-        # persist at every stage boundary: each stage's manifest count is
-        # an action and the final writes replay the chain — without the
-        # cache the expensive middle stages (LSH candidates → Jaccard
-        # verify → connected components) re-execute once per downstream
-        # action instead of once total
-        df = df.persist()
-        cached.append(df)
-        return df
-
-    def drop(df, reason):
-        # materialize the (small, id-only) drop set NOW, while its parent
-        # stage cache is hot — this is what lets retire() release the big
-        # text-bearing caches as the pipeline advances instead of holding
-        # every stage in memory until the final dropped/ write replays it
-        part = df.select("doc_id").withColumn("reason", F.lit(reason)).persist()
-        part.count()
-        cached.append(part)
-        dropped_parts.append(part)
-
-    def retire(df):
-        # stage cache no later action reads again: free its storage
-        # immediately (holding all ~7 full-text stage caches at once
-        # starves the execution-memory pool under 32 concurrent tasks)
-        df.unpersist()
-
-    # 0. URL quality filter (optional, --url-blocklist): the cheapest
-    #    gate runs first, before any text-derived key is computed —
-    #    blocked/spam-scored URLs never pay for hashing or shingling.
-    #    Broadcast blocklist + JVM scoring: no shuffle of the doc stream.
-    if getattr(args, "url_blocklist", None):
-        if "url" not in src.columns:
-            raise ValueError("--url-blocklist requires a 'url' input column")
-        from thecrowler_spark.operators.urlfilter import (
-            DEFAULT_THRESHOLD,
-            url_quality_filter,
-        )
-
-        thr = args.url_threshold if args.url_threshold is not None else DEFAULT_THRESHOLD
-        verdicts0 = url_quality_filter(
-            src.select("doc_id", "url"),
-            spark.read.parquet(args.url_blocklist),
-            threshold=thr,
-        )
-        url_losers = verdicts0.filter(~F.col("kept")).select("doc_id")
-        drop(url_losers, "url_filter")
-        pre = docs
-        docs = stage(docs.join(url_losers, "doc_id", "left_anti"))
-        manifest["stages"]["url_filter"] = docs.count()
-        _mark("url_filter")
-        retire(pre)
 
     # incremental state (--state): prior-batch knowledge arrives as
     # LakeTable snapshots. Commit order at the end is hashes → sigs →
@@ -356,31 +309,82 @@ def run_pipeline(spark, args, docs_df=None) -> dict:
                 .agg(F.sum("n_occurrences").alias("n_occurrences"))
             )
 
+    def judge(df, ids, reason, keep=False, key="doc_id"):
+        """``df`` plus the stage's ``reason`` column: set on the rows whose
+        ``key`` is in ``ids`` (distinct keys) — or, with ``keep``, on the
+        rows whose key is not — and NULL on the rest."""
+        hit = F.col("_hit").isNull() if keep else F.col("_hit").isNotNull()
+        return df.join(ids.select(key, F.lit(True).alias("_hit")), key, "left").select(
+            *df.columns, F.when(hit, F.lit(reason)).alias("reason")
+        )
+
+    live = [docs]  # the cached stage table the next step releases
+    drops = []  # (materialized (doc_id, reason) rows, row count) per stage
+
+    def step(name, judged):
+        """Run one stage over its judged table (input rows + ``reason``,
+        NULL = kept): persist it and materialize it with one action that
+        observes the kept/dropped counts; materialize the (small) drop
+        rows while it is hot; release the previous stage's table, so at
+        most two stage tables are cached at once. Persisting matters: the
+        table is read by its count, its drop rows and the next stage, and
+        uncached the expensive middle stages (LSH → Jaccard verify →
+        components) would re-execute once per read. Returns the kept rows."""
+        is_dropped = F.col("reason").isNotNull()
+        obs = Observation()
+        with job_description(spark, f"pipeline/{batch_tag}/{name}"):
+            judged.persist().observe(
+                obs, F.count(F.lit(1)).alias("rows"), F.count("reason").alias("dropped")
+            ).count()
+            n = obs.get
+            if n["dropped"]:
+                drops.append((
+                    judged.filter(is_dropped).select("doc_id", "reason").localCheckpoint(eager=True),
+                    n["dropped"],
+                ))
+        live[0].unpersist()
+        live[0] = judged
+        if manifest["input_rows"] is None:
+            manifest["input_rows"] = n["rows"]
+        manifest["stages"][name] = n["rows"] - n["dropped"]
+        _mark(name)
+        return judged.filter(~is_dropped).drop("reason")
+
+    # 0. URL quality filter (optional, --url-blocklist): the cheapest
+    #    gate runs first, before any text-derived key is computed —
+    #    blocked/spam-scored URLs never pay for hashing or shingling.
+    #    Broadcast blocklist + JVM scoring: no shuffle of the doc stream.
+    if getattr(args, "url_blocklist", None):
+        if "url" not in src.columns:
+            raise ValueError("--url-blocklist requires a 'url' input column")
+        from thecrowler_spark.operators.urlfilter import (
+            DEFAULT_THRESHOLD,
+            url_quality_filter,
+        )
+
+        thr = args.url_threshold if args.url_threshold is not None else DEFAULT_THRESHOLD
+        verdicts0 = url_quality_filter(
+            src.select("doc_id", "url"),
+            spark.read.parquet(args.url_blocklist),
+            threshold=thr,
+        )
+        docs = step("url_filter", judge(docs, verdicts0.filter(~F.col("kept")), "url_filter"))
+
     _content_hash = F.sha2(TX.normalize_text("text"), 256)
 
     # 0b. cross-batch exact dedup: content already shipped by a prior
     #     batch leaves now, before within-batch grouping
     if prior_hashes is not None:
-        prior_dups = (
-            docs.withColumn("content_hash", _content_hash)
-            .join(prior_hashes.select("content_hash"), "content_hash", "left_semi")
-            .select("doc_id")
-        )
-        drop(prior_dups, "exact_dup_prior")
-        pre = docs
-        docs = stage(docs.join(prior_dups, "doc_id", "left_anti"))
-        manifest["stages"]["exact_dedup_prior"] = docs.count()
-        _mark("exact_dedup_prior")
-        retire(pre)
+        docs = step("exact_dedup_prior", judge(
+            docs.withColumn("content_hash", _content_hash), prior_hashes,
+            "exact_dup_prior", key="content_hash",
+        ).drop("content_hash"))
 
     # 1. exact dedup — keep the min doc_id per canonical content key
     keymap = DD.exact_dedup(docs, text_col="text", id_col="doc_id")
-    survivors = stage(docs.join(
-        keymap.select(F.col("keep_id").alias("doc_id")), "doc_id", "inner"
+    survivors = step("exact_dedup", judge(
+        docs, keymap.select(F.col("keep_id").alias("doc_id")), "exact_dup", keep=True
     ))
-    drop(docs.join(survivors.select("doc_id"), "doc_id", "left_anti"), "exact_dup")
-    manifest["stages"]["exact_dedup"] = survivors.count()
-    _mark("exact_dedup")
     if lake_hashes is not None:
         # snapshot the batch's shipped content hashes while the stage
         # cache is hot; committed after the output writes succeed
@@ -389,34 +393,31 @@ def run_pipeline(spark, args, docs_df=None) -> dict:
             .distinct()
             .localCheckpoint(eager=True)
         )
-    retire(docs)
 
     # 2. fuzzy dedup — LSH candidates → exact-Jaccard verification at
     #    --minhash-threshold → components → keep component min. With
     #    n_hashes=8 / bands=4 a band key is only 2 minhashes, so raw
     #    candidates carry little Jaccard signal; the verify step is what
     #    makes the threshold real (no false-positive doc removal).
-    #    stage() both intermediates (r6, guide §5 "caching is worth it
-    #    when a DataFrame is reused"): verify_pairs_jaccard references
+    #    Both intermediates are persisted (r6, guide §5 "caching is worth
+    #    it when a DataFrame is reused"): verify_pairs_jaccard references
     #    its candidate input three times (id-union + the pair fan-out)
     #    and its shingle table three more, and connected_components'
     #    edge checkpoint traverses the verified pairs again — uncached,
     #    the LSH band join re-executed ~5x and the fuzzy stage measured
     #    453 s of the 544 s 200k-doc lane (38 s with both persisted).
-    candidates = stage(DD.minhash_lsh_candidates(
+    candidates = DD.minhash_lsh_candidates(
         survivors, text_col="text", id_col="doc_id", n_hashes=8, bands=4, k=3
-    ))
-    pairs = stage(DD.verify_pairs_jaccard(
+    ).persist()
+    pairs = DD.verify_pairs_jaccard(
         survivors, candidates, text_col="text", id_col="doc_id",
         k=3, threshold=args.minhash_threshold,
-    ))
+    ).persist()
     # connected_components eagerly checkpoints its edge set during the
     # call, so both caches are consumed once it returns
     comp = DD.connected_components(pairs)
-    retire(candidates)
-    retire(pairs)
-    # cache the (tiny, id-only) loser set: it is read twice (anti-join +
-    # dropped/ audit) and recomputing it replays the whole LSH chain
+    candidates.unpersist()
+    pairs.unpersist()
     if args.keep_policy == "best":
         # RefinedWeb-style keep-best-copy: the cluster winner is its
         # highest-quality member (text length, ties to lowest id) —
@@ -427,20 +428,12 @@ def run_pipeline(spark, args, docs_df=None) -> dict:
             quality_col="n_chars",
             id_col="doc_id",
         ).select(F.col("kept_id").alias("doc_id"))
-        fuzzy_losers = stage(
-            comp.select(F.col("id").alias("doc_id")).join(reps, "doc_id", "left_anti")
-        )
+        fuzzy_losers = comp.select(F.col("id").alias("doc_id")).join(reps, "doc_id", "left_anti")
     else:
-        fuzzy_losers = stage(comp.filter(F.col("id") != F.col("component")).select(
+        fuzzy_losers = comp.filter(F.col("id") != F.col("component")).select(
             F.col("id").alias("doc_id")
-        ))
-    exact_survivors = survivors
-    survivors = stage(survivors.join(fuzzy_losers, "doc_id", "left_anti"))
-    drop(fuzzy_losers, "fuzzy_dup")
-    manifest["stages"]["fuzzy_dedup"] = survivors.count()
-    _mark("fuzzy_dedup")
-    retire(exact_survivors)
-    retire(fuzzy_losers)
+        )
+    survivors = step("fuzzy_dedup", judge(survivors, fuzzy_losers, "fuzzy_dup"))
 
     # 2b. cross-batch fuzzy dedup: a doc whose FULL minhash signature
     #     equals a prior-batch survivor's is a near-certain near-dup
@@ -460,12 +453,8 @@ def run_pipeline(spark, args, docs_df=None) -> dict:
                 keyed.join(prior_sigs.select("sig_key"), "sig_key", "left_semi")
                 .select("doc_id")
             )
-            drop(prior_fuzzy, "fuzzy_dup_prior")
-            prev = survivors
-            survivors = stage(survivors.join(prior_fuzzy, "doc_id", "left_anti"))
-            manifest["stages"]["fuzzy_dedup_prior"] = survivors.count()
-            _mark("fuzzy_dedup_prior")
-            retire(prev)
+            survivors = step("fuzzy_dedup_prior",
+                             judge(survivors, prior_fuzzy, "fuzzy_dup_prior"))
             new_sigs = keyed.join(prior_fuzzy, "doc_id", "left_anti").select("sig_key")
         else:
             new_sigs = keyed.select("sig_key")
@@ -475,8 +464,8 @@ def run_pipeline(spark, args, docs_df=None) -> dict:
     #     cells from broadcast centroids, within-cell cosine drop test
     #     as ONE cell-keyed equi-join (never all-pairs). Docs without
     #     an embedding pass through unjudged (left_semi restricts the
-    #     embedding table to survivors, the anti-join only removes ids
-    #     the drop test actually condemned).
+    #     embedding table to survivors; only ids the drop test actually
+    #     condemned get a reason).
     if getattr(args, "semdedup", 0) > 0:
         from thecrowler_spark.operators.similarity import semdedup
 
@@ -486,85 +475,61 @@ def run_pipeline(spark, args, docs_df=None) -> dict:
         emb = emb.select("doc_id", "embedding").join(
             survivors.select("doc_id"), "doc_id", "left_semi"
         )
-        sem_losers = stage(
-            semdedup(emb, n_cells=args.semdedup_cells, eps=args.semdedup,
-                     vec_col="embedding", id_col="doc_id")
-            .filter(F.col("dropped")).select("doc_id")
-        )
-        drop(sem_losers, "semantic_dup")
-        prev = survivors
-        survivors = stage(survivors.join(sem_losers, "doc_id", "left_anti"))
-        manifest["stages"]["semantic_dedup"] = survivors.count()
-        _mark("semantic_dedup")
-        retire(prev)
-        retire(sem_losers)
+        sem_losers = semdedup(emb, n_cells=args.semdedup_cells, eps=args.semdedup,
+                              vec_col="embedding", id_col="doc_id").filter(F.col("dropped"))
+        survivors = step("semantic_dedup", judge(survivors, sem_losers, "semantic_dup"))
 
     # 3. CCNet boilerplate-line removal (hash-keyed shuffle); with
-    #    --state the threshold sees cumulative cross-batch counts
+    #    --state the threshold sees cumulative cross-batch counts. A doc
+    #    left with no text drops as all_boilerplate.
     if lake_lines is not None:
         batch_lines = DD.line_hash_counts(
             survivors, text_col="text", id_col="doc_id"
         ).localCheckpoint(eager=True)
-    cleaned_all = stage(DD.dedup_lines(
+
+    def emptied(df, reason):
+        """``df`` plus ``reason`` on the rows whose text came out empty."""
+        return df.withColumn("reason", F.when(F.length("text") == 0, F.lit(reason)))
+
+    cleaned = step("line_dedup", emptied(DD.dedup_lines(
         survivors, text_col="text", id_col="doc_id", max_count=args.line_max_count,
         prior_counts=prior_lines,
-    ).select("doc_id", F.col("text_dedup").alias("text")))
-    drop(cleaned_all.filter(F.length("text") == 0), "all_boilerplate")
-    fuzzy_survivors = survivors
-    cleaned = cleaned_all.filter(F.length("text") > 0)
-    manifest["stages"]["line_dedup"] = cleaned.count()
-    _mark("line_dedup")
-    retire(fuzzy_survivors)
+    ).select("doc_id", F.col("text_dedup").alias("text")), "all_boilerplate"))
 
     # 3b. exact-substring span dedup (optional, --span-w > 0): strip
     #     corpus-repeated w-token runs line dedup can't see (mid-line
     #     licence boilerplate, quoted replies, templated sentences)
     if args.span_w > 0:
-        spanned = stage(DD.repeated_span_dedup(
+        cleaned = step("span_dedup", emptied(DD.repeated_span_dedup(
             cleaned, text_col="text", id_col="doc_id", w=args.span_w
-        ).select("doc_id", F.col("text_clean").alias("text")))
-        drop(spanned.filter(F.length("text") == 0), "all_duplicated")
-        line_cache = cleaned_all
-        cleaned = spanned.filter(F.length("text") > 0)
-        manifest["stages"]["span_dedup"] = cleaned.count()
-        _mark("span_dedup")
-        retire(line_cache)
-        cleaned_all = spanned  # the cache retire() frees after stage 4
+        ).select("doc_id", F.col("text_clean").alias("text")), "all_duplicated"))
 
     # 4. quality filter (integer-exact verdicts)
-    verdicts = stage(quality_filter_verdict(cleaned))
-    kept = verdicts.filter(F.col("keep")).select("doc_id")
-    drop(verdicts.filter(~F.col("keep")).select("doc_id"), "quality")
-    survivors = stage(cleaned.join(kept, "doc_id", "inner"))
-    manifest["stages"]["quality"] = survivors.count()
-    _mark("quality")
-    retire(cleaned_all)
-    retire(verdicts)
-    quality_cache = survivors
+    verdicts = quality_filter_verdict(cleaned)
+    survivors = step("quality", judge(cleaned, verdicts.filter(~F.col("keep")), "quality"))
 
     # 4b. model-based filter (optional, --model-weights): fastText-style
     #     hashed linear classifier inference — model arrives as data,
-    #     scoring is a broadcast join, labels integer-exact
+    #     scoring is a broadcast join, labels integer-exact. The judged
+    #     table carries each doc's margin and label for --source-rollup.
     margins_by_source = None
     if args.model_weights:
         from thecrowler_spark.operators.classifier import classify_docs
 
         weights = spark.read.parquet(args.model_weights)
-        scored = stage(classify_docs(
+        scored = classify_docs(
             survivors, weights, n_buckets=args.model_buckets,
             threshold=args.model_threshold,
-        ))
-        kept_ids = scored.filter(F.col("label") == "keep").select("doc_id")
-        drop(scored.filter(F.col("label") != "keep").select("doc_id"), "model_filter")
-        prev = survivors
-        survivors = stage(survivors.join(kept_ids, "doc_id", "inner"))
-        manifest["stages"]["model_filter"] = survivors.count()
-        _mark("model_filter")
+        )
+        judged = survivors.join(scored.select("doc_id", "margin", "label"), "doc_id").withColumn(
+            "reason", F.when(F.col("label") != "keep", F.lit("model_filter"))
+        )
+        survivors = step("model_filter", judged).select("doc_id", "text")
         if getattr(args, "source_rollup", False):
-            # tiny per-source margin sums (n_sources rows), pinned while
-            # the scored cache is hot so retire() below stays safe
+            # tiny per-source margin sums (n_sources rows), read off the
+            # model_filter table while it is cached
             margins_by_source = (
-                scored.join(sources_dim, "doc_id")
+                judged.join(sources_dim, "doc_id")
                 .groupBy("source")
                 .agg(
                     F.sum("margin").cast("long").alias("sum_margin"),
@@ -574,9 +539,6 @@ def run_pipeline(spark, args, docs_df=None) -> dict:
                 )
                 .localCheckpoint(eager=True)
             )
-        retire(prev)
-        retire(scored)
-        quality_cache = survivors
 
     # 4c. LM quality bucketing (optional, --lm-drop-tail): CCNet-style
     #     head/middle/tail over the post-filter survivors — integer
@@ -590,34 +552,21 @@ def run_pipeline(spark, args, docs_df=None) -> dict:
         bucket_fn = (
             LM.quality_buckets_bigram if args.lm_ngram == 2 else LM.quality_buckets
         )
-        buckets = stage(bucket_fn(
-            survivors, k=args.lm_k, vocab_size=args.lm_vocab
+        buckets = bucket_fn(survivors, k=args.lm_k, vocab_size=args.lm_vocab)
+        survivors = step("lm_filter", judge(
+            survivors, buckets.filter(F.col("bucket") == args.lm_k), "lm_tail"
         ))
-        tail_ids = buckets.filter(F.col("bucket") == args.lm_k).select("doc_id")
-        drop(tail_ids, "lm_tail")
-        prev = survivors
-        survivors = stage(survivors.join(tail_ids, "doc_id", "left_anti"))
-        manifest["stages"]["lm_filter"] = survivors.count()
-        _mark("lm_filter")
-        retire(prev)
-        retire(buckets)
-        quality_cache = survivors
 
     # 5. decontamination (optional)
     if args.benchmark:
         bench = spark.read.parquet(args.benchmark).select("doc_id", "text")
-        flags = stage(DD.contamination_flags(
-            survivors, bench, text_col="text", id_col="doc_id"
-        ).select("doc_id"))
-        drop(flags, "contaminated")
-        survivors = survivors.join(flags, "doc_id", "left_anti")
-        manifest["stages"]["decontaminated"] = survivors.count()
-        _mark("decontaminated")
+        flags = DD.contamination_flags(survivors, bench, text_col="text", id_col="doc_id")
+        survivors = step("decontaminated", judge(survivors, flags, "contaminated"))
 
-    # 6. language ID + per-language stats. Default = the trigram
-    #    quality path (broadcast profile join + one doc-key shuffle;
-    #    adds a column, never drops rows — survivorship and therefore
-    #    the incremental-state semantics are langid-independent).
+    # 6. language ID + per-language stats: the trigram quality path
+    #    (broadcast profile join + one doc-key shuffle; adds a column,
+    #    never drops rows — survivorship and therefore the
+    #    incremental-state semantics are langid-independent).
     #    localCheckpoint first: the detector references its input twice
     #    (trigram explode + winner join-back) — cutting lineage here
     #    stops the deep stage-1..5 plan from being re-rendered per
@@ -635,24 +584,14 @@ def run_pipeline(spark, args, docs_df=None) -> dict:
         from thecrowler_spark.operators.dsir import dsir_select
 
         target = spark.read.parquet(args.dsir_target).select("doc_id", "text")
-        sel_ids = stage(
-            dsir_select(spark, target, survivors, k=args.dsir_k,
-                        n_buckets=args.dsir_buckets).select("doc_id")
-        )
-        drop(survivors.select("doc_id").join(sel_ids, "doc_id", "left_anti"),
-             "dsir_unselected")
-        survivors = stage(survivors.join(sel_ids, "doc_id", "left_semi"))
-        manifest["stages"]["dsir"] = survivors.count()
-        _mark("dsir")
-        retire(sel_ids)
+        selected = dsir_select(spark, target, survivors, k=args.dsir_k,
+                               n_buckets=args.dsir_buckets)
+        survivors = step("dsir", judge(survivors, selected, "dsir_unselected", keep=True))
 
-    if getattr(args, "langid", "trigram") == "trigram":
-        from thecrowler_spark.operators.langid import detect_language
-
-        survivors = detect_language(survivors, text_col="text", id_col="doc_id")
-    else:
-        survivors = survivors.withColumn("lang_pred", TX.detect_lang_expr(F.col("text")))
-    stats = survivors.groupBy("lang_pred").agg(
+    # the language-tagged survivors feed both the stats and the packing
+    # (through --mixture); cached until the run ends
+    lang_docs = detect_language(survivors, text_col="text", id_col="doc_id").persist()
+    stats = lang_docs.groupBy("lang_pred").agg(
         F.count("*").alias("n_docs"),
         F.sum(TX.token_count(F.col("text"))).alias("total_tokens"),
     )
@@ -661,36 +600,35 @@ def run_pipeline(spark, args, docs_df=None) -> dict:
     #     per-source token budgets in deterministic md5 order — the
     #     Pile/DoReMi-style assembly step, two-phase prefix sum
     #     (skew-safe even when one source is 80% of the corpus)
-    survivors = stage(survivors)
-    sized = survivors.withColumn("n_tokens", TX.token_count(F.col("text")))
+    sized = lang_docs.withColumn("n_tokens", TX.token_count(F.col("text")))
     if getattr(args, "mixture", None):
         from thecrowler_spark.operators.sampling import mixture_sample
 
         mix_budget, mix_weights = parse_mixture(args.mixture)
-        mixed = stage(mixture_sample(
-            sized.join(sources_dim, "doc_id"), mix_weights, mix_budget
-        ))
-        drop(mixed.filter(~F.col("included")).select("doc_id"), "mixture_budget")
-        sized = mixed.filter(F.col("included")).select(*sized.columns)
-        manifest["stages"]["mixture"] = sized.count()
-        _mark("mixture")
+        mixed = mixture_sample(sized.join(sources_dim, "doc_id"), mix_weights, mix_budget)
+        sized = step("mixture", mixed.withColumn(
+            "reason", F.when(~F.col("included"), F.lit("mixture_budget"))
+        )).select(*sized.columns)
 
-    # 7. split + pack
+    # 7. split + pack (drops nothing)
     weights = {"train": args.train, "val": args.val, "test": args.test}
-    packed = stage(pack_documents(
+    packed = step("packed", pack_documents(
         sized.withColumn("split", assign_split(F.col("doc_id"), weights)),
         budget=args.budget,
         buckets=args.buckets,
-    ))
-    manifest["stages"]["packed"] = packed.count()
-    _mark("packed")
-    retire(quality_cache)
+    ).withColumn("reason", F.lit(None).cast("string")))
 
     out = args.output
     packed.write.mode("overwrite").parquet(f"{out}/documents")
     _mark("write_documents")
     stats.write.mode("overwrite").parquet(f"{out}/stats")
     _mark("write_stats")
+
+    def write_counted(df, path):
+        """Write ``df`` to ``path``; its row count, observed on the write."""
+        obs = Observation()
+        df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode("overwrite").parquet(path)
+        return obs.get["rows"]
 
     # 8. optional analytics outputs over the curated survivor set
     if getattr(args, "anchor_corpus", False):
@@ -701,8 +639,7 @@ def run_pipeline(spark, args, docs_df=None) -> dict:
         anchors = anchor_texts(
             links.join(kept_targets, "dst", "left_semi"), k=args.anchor_k
         )
-        anchors.write.mode("overwrite").parquet(f"{out}/anchors")
-        manifest["stages"]["anchor_corpus"] = spark.read.parquet(f"{out}/anchors").count()
+        manifest["stages"]["anchor_corpus"] = write_counted(anchors, f"{out}/anchors")
         _mark("anchor_corpus")
     if getattr(args, "source_rollup", False):
         roll = (
@@ -720,8 +657,7 @@ def run_pipeline(spark, args, docs_df=None) -> dict:
         )
         if margins_by_source is not None:
             roll = roll.join(margins_by_source, "source", "left")
-        roll.write.mode("overwrite").parquet(f"{out}/sources")
-        manifest["stages"]["source_rollup"] = spark.read.parquet(f"{out}/sources").count()
+        manifest["stages"]["source_rollup"] = write_counted(roll, f"{out}/sources")
         _mark("source_rollup")
     # 8b. perceptual media dedup (optional, --media): aHash over real
     #     decoded pixels (Arrow mapInPandas, fuses into the scan) →
@@ -746,21 +682,18 @@ def run_pipeline(spark, args, docs_df=None) -> dict:
         )
         media_kept = media_sig.join(losers, "media_ref", "left_anti")
         media_pairs.write.mode("overwrite").parquet(f"{out}/media_pairs")
-        media_kept.write.mode("overwrite").parquet(f"{out}/media_kept")
-        manifest["stages"]["media_kept"] = spark.read.parquet(
-            f"{out}/media_kept"
-        ).count()
+        manifest["stages"]["media_kept"] = write_counted(media_kept, f"{out}/media_kept")
         _mark("media_kept")
         media_pairs.unpersist()
         media_sig.unpersist()
 
-    if dropped_parts:
-        d = dropped_parts[0]
-        for part in dropped_parts[1:]:
-            d = d.unionByName(part)
-        d.write.mode("overwrite").parquet(f"{out}/dropped")
-        manifest["dropped_rows"] = spark.read.parquet(f"{out}/dropped").count()
-        _mark("write_dropped")
+    # dropped/ is written even when no stage dropped a row
+    dropped = docs.select("doc_id", F.lit(None).cast("string").alias("reason")).limit(0)
+    for part, _ in drops:
+        dropped = dropped.unionByName(part)
+    dropped.write.mode("overwrite").parquet(f"{out}/dropped")
+    manifest["dropped_rows"] = sum(n for _, n in drops)
+    _mark("write_dropped")
 
     # state commits last, each a LakeTable snapshot (outputs already on
     # disk). Shape shared by all three: fold every other tag into
@@ -796,10 +729,9 @@ def run_pipeline(spark, args, docs_df=None) -> dict:
             ), ["line_hash", "n_occurrences"],
         )
 
-    if sources_dim is not None:
-        sources_dim.unpersist()
-    for df in cached:
-        df.unpersist()
+    for df in (live[0], lang_docs, sources_dim):
+        if df is not None:
+            df.unpersist()
     return manifest
 
 

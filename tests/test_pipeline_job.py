@@ -7,6 +7,29 @@ import json
 
 from jobs.pipeline_job import parse_args, run_pipeline
 
+#: stage_secs keys beside the stage names: the three output writes
+_WRITES = {"write_documents", "write_stats", "write_dropped"}
+#: the stages every run has, in order
+_CORE = ["exact_dedup", "fuzzy_dedup", "line_dedup", "quality", "packed"]
+#: the stages of a --state batch that has prior state to read
+_PRIOR = ["exact_dedup_prior", "exact_dedup", "fuzzy_dedup", "fuzzy_dedup_prior",
+          "line_dedup", "quality", "packed"]
+
+
+def _assert_audit(spark, m, inp, out, stages):
+    """The audit invariant of one run over the input parquet ``inp``:
+    documents/ and dropped/ partition the input ids (so each dropped id
+    appears exactly once), ``dropped_rows`` is dropped/'s row count, and
+    the manifest names exactly ``stages``, in order, and times each of
+    them plus the three writes."""
+    ids = [r.doc_id for r in spark.read.parquet(inp).select("doc_id").collect()]
+    kept = [r.doc_id for r in spark.read.parquet(out + "/documents").select("doc_id").collect()]
+    dropped = [r.doc_id for r in spark.read.parquet(out + "/dropped").select("doc_id").collect()]
+    assert sorted(kept + dropped) == sorted(ids)
+    assert m["dropped_rows"] == len(dropped)
+    assert list(m["stages"]) == stages
+    assert set(m["stage_secs"]) == set(stages) | _WRITES
+
 
 def _corpus(spark):
     good = (
@@ -76,6 +99,44 @@ def test_pipeline_stages_and_audit(spark, tmp_path):
 
     stats = spark.read.parquet(out + "/stats")
     assert stats.count() >= 1  # per-language accounting present
+    _assert_audit(spark, m, docs_path, out,
+                  ["exact_dedup", "fuzzy_dedup", "line_dedup", "quality",
+                   "decontaminated", "packed"])
+
+
+def test_pipeline_names_its_stages_in_job_descriptions(spark, tmp_path):
+    """Every stage's Spark jobs carry ``pipeline/<batch_tag>/<stage>`` as
+    their description; the caller's description comes back afterwards
+    and the caller's job group is left on every job."""
+    inp, out = str(tmp_path / "in"), str(tmp_path / "out")
+    _corpus(spark).write.parquet(inp)
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+
+    def jobs():
+        jsc.listenerBus().waitUntilEmpty(30_000)
+        js = jsc.statusStore().jobsList(None)
+        return [js.apply(i) for i in range(js.size())]
+
+    before = max((j.jobId() for j in jobs()), default=-1)
+    sc.setJobGroup("caller-group", "caller")
+    sc.setLocalProperty("spark.job.description", "caller-desc")
+    try:
+        m = run_pipeline(spark, parse_args(
+            ["--input", inp, "--output", out, "--batch-tag", "named",
+             "--budget", "64", "--buckets", "4"]
+        ))
+        assert sc.getLocalProperty("spark.job.description") == "caller-desc"
+        assert sc.getLocalProperty("spark.jobGroup.id") == "caller-group"
+    finally:
+        sc.setLocalProperty("spark.job.description", None)
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    new = [j for j in jobs() if j.jobId() > before]
+    descs = {j.description().get() for j in new if j.description().isDefined()}
+    for stage in _CORE:
+        assert f"pipeline/named/{stage}" in descs, (stage, sorted(descs))
+    assert {j.jobGroup().get() for j in new} == {"caller-group"}
+    _assert_audit(spark, m, inp, out, _CORE)
 
 
 def test_pipeline_incremental_state(spark, tmp_path):
@@ -147,6 +208,8 @@ def test_pipeline_incremental_state(spark, tmp_path):
     assert set(t2) == {23}
     assert footer not in t2[23]          # cumulative threshold fired
     assert "fresh fourth piece" in t2[23]  # the real content survived
+    _assert_audit(spark, m1, in1, out1, _CORE)
+    _assert_audit(spark, m2, in2, out2, _PRIOR)
 
 
 def test_pipeline_incremental_replay_idempotent(spark, tmp_path):
@@ -182,6 +245,7 @@ def test_pipeline_incremental_replay_idempotent(spark, tmp_path):
     ]
     state = str(tmp_path / "state")
     outs = []
+    runs = []  # (manifest, input, output) of each batch's last delivery
 
     def _tree(out):
         docs = {(r["doc_id"], r["text"]) for r in
@@ -210,6 +274,7 @@ def test_pipeline_incremental_replay_idempotent(spark, tmp_path):
             assert _tree(out) == first_tree
             assert first_tree[0]  # non-vacuous: the batch shipped docs
             assert m_replay["stages"] == m_first["stages"]
+        runs.append((m_replay if i == 1 else m_first, inp, out))
 
     # the replay did not inflate the cumulative count: b3 ships the footer
     t3 = {r["doc_id"]: r["text"] for r in
@@ -233,6 +298,8 @@ def test_pipeline_incremental_replay_idempotent(spark, tmp_path):
         .agg(F.sum("n_occurrences")).collect()[0][0]
     )
     assert footer_hash_count == 4  # 2 + 1 + 1, replay invisible
+    for i, (m, inp, out) in enumerate(runs):
+        _assert_audit(spark, m, inp, out, _PRIOR if i else _CORE)
 
 
 def test_pipeline_model_filter_and_span_stage(spark, tmp_path):
@@ -281,6 +348,9 @@ def test_pipeline_model_filter_and_span_stage(spark, tmp_path):
     assert set(texts) == {1, 2}
     for t in texts.values():
         assert "omega" not in t and "sigma" not in t  # shared run stripped
+    _assert_audit(spark, m, inp, out,
+                  ["exact_dedup", "fuzzy_dedup", "line_dedup", "span_dedup",
+                   "quality", "model_filter", "packed"])
 
 
 def test_pipeline_mixture_anchor_rollup_stages(spark, tmp_path):
@@ -347,6 +417,9 @@ def test_pipeline_mixture_anchor_rollup_stages(spark, tmp_path):
         assert 0 <= r.n_kept <= r.n_docs_in
         assert r.keep_share_pct == r.n_kept * 100 // r.n_docs_in
     assert m["stages"]["source_rollup"] == 2
+    _assert_audit(spark, m, docs_path, out,
+                  ["exact_dedup", "fuzzy_dedup", "line_dedup", "quality", "mixture",
+                   "packed", "anchor_corpus", "source_rollup"])
 
 
 def test_pipeline_incremental_query_planted_branches(spark):
@@ -442,6 +515,9 @@ def test_pipeline_semdedup_and_dsir_stages(spark, tmp_path):
     kept = {r["doc_id"] for r in
             spark.read.parquet(out + "/documents").select("doc_id").collect()}
     assert kept == {2}
+    _assert_audit(spark, m, inp, out,
+                  ["exact_dedup", "fuzzy_dedup", "semantic_dedup", "line_dedup",
+                   "quality", "dsir", "packed"])
 
 
 def test_pipeline_lm_tail_drop_stage(spark, tmp_path):
@@ -475,6 +551,9 @@ def test_pipeline_lm_tail_drop_stage(spark, tmp_path):
     kept = {r["doc_id"] for r in
             spark.read.parquet(out + "/documents").select("doc_id").collect()}
     assert kept == {1, 2}
+    _assert_audit(spark, m, inp, out,
+                  ["exact_dedup", "fuzzy_dedup", "line_dedup", "quality", "lm_filter",
+                   "packed"])
 
 
 def test_pipeline_url_filter_stage(spark, tmp_path):
@@ -514,6 +593,7 @@ def test_pipeline_url_filter_stage(spark, tmp_path):
     assert (10, "exact_dup") not in dropped
     # doc 11 (near-dup of 1) survived the gate and still falls to fuzzy
     assert (11, "fuzzy_dup") in dropped
+    _assert_audit(spark, m, docs_path, out, ["url_filter"] + _CORE)
 
 
 def test_pipeline_keep_policy_best(spark, tmp_path):
@@ -551,6 +631,8 @@ def test_pipeline_keep_policy_best(spark, tmp_path):
     kept_best = {r["doc_id"] for r in spark.read.parquet(out_best + "/documents").collect()}
     assert 1 in kept_min and 5 not in kept_min
     assert 5 in kept_best and 1 not in kept_best
+    _assert_audit(spark, m_min, docs_path, out_min, _CORE)
+    _assert_audit(spark, m_best, docs_path, out_best, _CORE)
 
 
 def test_pipeline_media_dedup_stage(spark, tmp_path):
@@ -594,3 +676,5 @@ def test_pipeline_media_dedup_stage(spark, tmp_path):
             for v in range(len(MM.NEARDUP_VARIANTS)))
         for g in (0, 1)
     } | {"https://img.example.com/g2v0.ppm"}
+    _assert_audit(spark, m, docs_path, out,
+                  _CORE + ["media_in", "media_pairs", "media_kept"])

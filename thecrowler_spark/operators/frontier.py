@@ -43,7 +43,6 @@ from __future__ import annotations
 
 import json
 import time
-from contextlib import contextmanager
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -51,6 +50,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import urls as U
+from ..session import job_description
 from . import spans as SP
 
 # Row categories (one per reference worker outcome)
@@ -512,19 +512,10 @@ class CrawlEngine:
             self._parsed = SP.parse_documents(self._documents).persist()
         return self._parsed
 
-    @contextmanager
     def _phase(self, run_id: str, rnd: int, phase: str):
-        """Name the Spark jobs of one engine phase in the event log and
-        UI: ``spark.job.description`` = ``crawl/<run_id>/r<k>/<phase>``,
-        restored to the caller's value afterwards. The job group stays
-        the caller's (a benchmark or scheduler attributes jobs by it)."""
-        sc = self.spark.sparkContext
-        prev = sc.getLocalProperty("spark.job.description")
-        sc.setLocalProperty("spark.job.description", f"crawl/{run_id}/r{rnd}/{phase}")
-        try:
-            yield
-        finally:
-            sc.setLocalProperty("spark.job.description", prev)
+        """Name the Spark jobs of one engine phase
+        ``crawl/<run_id>/r<k>/<phase>`` (see :func:`job_description`)."""
+        return job_description(self.spark, f"crawl/{run_id}/r{rnd}/{phase}")
 
     def _seen_norm(self, c) -> F.Column:
         """URL-seen dedup key: NormalizeURL (lower + rtrim-slash), with

@@ -8,6 +8,7 @@ Shuffle partitioning is sized per-run by the frontier loop, not here.
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -60,3 +61,18 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+@contextmanager
+def job_description(spark: SparkSession, desc: str):
+    """Name the Spark jobs run inside the block in the event log and UI:
+    ``spark.job.description`` = ``desc``, restored to the caller's value
+    afterwards. The job group stays the caller's (a benchmark or
+    scheduler attributes jobs by it)."""
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setLocalProperty("spark.job.description", desc)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.job.description", prev)
