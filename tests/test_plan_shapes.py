@@ -513,3 +513,79 @@ def test_metricsderive_dimensionless_lag_not_single_partition(spark):
     rows = df.orderBy("event_id").select("change_type").collect()
     assert rows[0]["change_type"] == "new"
     assert all(r["change_type"] == "unchanged" for r in rows[1:])
+
+
+def _search_star_tables(spark, tmp_path):
+    """A three-page index star as parquet (file scans keep their
+    Filter/Project nodes, unlike local relations)."""
+    si = spark.createDataFrame(
+        [(f"i{k}", f"https://h.example.com/{k}", f"title {k}", "summary") for k in range(3)],
+        "index_id string, page_url string, title string, summary string",
+    )
+    ki = spark.createDataFrame(
+        [("i0", "alpha"), ("i1", "beta"), ("i2", "alpha")], "index_id string, keyword string"
+    )
+    si.write.parquet(str(tmp_path / "search_index"))
+    ki.write.parquet(str(tmp_path / "keyword_index"))
+    rd = spark.read
+    return rd.parquet(str(tmp_path / "search_index")), rd.parquet(str(tmp_path / "keyword_index"))
+
+
+def _ancestors(lines: list[str], i: int) -> list[str]:
+    """The plan-tree lines above node ``lines[i]``, nearest first."""
+
+    def col(line: str) -> int:
+        return len(line) - len(line.lstrip(" :+-"))
+
+    out, c = [], col(lines[i])
+    for line in reversed(lines[:i]):
+        if col(line) < c:
+            out.append(line)
+            c = col(line)
+    return out
+
+
+def test_search_pages_is_one_job_no_exchange(spark):
+    """Page search over a doc_id-keyed table is scan → filter → top-k:
+    no dedup shuffle, with or without an in-query offset."""
+    from thecrowler_spark.operators.search import search
+
+    pages = spark.range(50).select(
+        F.format_string("d%03d", "id").alias("doc_id"),
+        F.format_string("title %d", "id").alias("title"),
+        F.lit("summary").alias("summary"),
+        F.format_string("body alpha %d", F.col("id") % 7).alias("body_text"),
+        F.lit("en").alias("detected_lang"),
+    )
+    for q in ("alpha", "alpha title&offset:3&limit:5"):
+        plan = _plan(search(pages, q))
+        assert "Exchange" not in plan, plan
+        assert "TakeOrderedAndProject" in plan, plan
+
+
+def test_search_star_prefilters_keyword_chain(spark, tmp_path):
+    """The star reads keyword_index only below a BroadcastExchange,
+    through a Filter on keyword; with no bare terms it never reads it."""
+    from thecrowler_spark.operators.search import search_entity_star
+
+    si, ki = _search_star_tables(spark, tmp_path)
+
+    def star(q):
+        return search_entity_star(
+            si.select("index_id", "page_url"), None, si, q,
+            entity_cols=("page_url",), link_col="page_url", keyword_index=ki,
+        )
+
+    lines = _plan(star("alpha | title:x")).splitlines()
+    scans = [i for i, line in enumerate(lines) if "Scan" in line and "keyword#" in line]
+    assert scans, "\n".join(lines)
+    for i in scans:
+        up = _ancestors(lines, i)
+        bx = next((k for k, line in enumerate(up) if "BroadcastExchange" in line), None)
+        assert bx is not None, "\n".join(lines)
+        assert any("Filter" in line and "keyword#" in line for line in up[:bx]), "\n".join(lines)
+    assert sorted(r["page_url"] for r in star("alpha | title:x").collect()) == [
+        "https://h.example.com/0", "https://h.example.com/2",
+    ]
+    assert "keyword#" not in _plan(star("title:1"))
+    assert [r["page_url"] for r in star("title:1").collect()] == ["https://h.example.com/1"]

@@ -1,4 +1,4 @@
-"""Search: the reference's "dorking" query language compiled to Columns.
+"""Search: the reference's "dorking" query language compiled to SQL predicates.
 
 Reference pipeline (/root/reference/pkg/search/search.go:39-110,
 tokenizer.go:55-130,490-510): tokenize (quoted phrases, ``\\`` escape,
@@ -10,8 +10,9 @@ when it passes ``isValidSpecifier`` (tokenizer.go:82-86,199-207),
 case-insensitive ``LIKE %term%`` over the default fields → prepend the
 star join (/root/reference/pkg/search/sql_templates.go:5-56).
 
-Here: the same token grammar compiled to a Catalyst Column predicate —
-the filter then pushes into the scan for free.
+Here: the same token grammar compiled to one SQL predicate string,
+parsed on the JVM side in one call — the filter then pushes into the
+scan for free.
 """
 
 from __future__ import annotations
@@ -87,6 +88,10 @@ def extract_control_modifier(value: str, name: str, current: int | None):
     return value, current
 
 
+#: largest LIMIT/OFFSET Spark accepts (a 32-bit int)
+_MAX_INT = 2**31 - 1
+
+
 def tokenize(query: str) -> list[str]:
     """Token stream per tokenizer.go:55-130 (quotes + escapes kept)."""
     return [m.group(1) for m in _TOKEN_RE.finditer(query)]
@@ -98,7 +103,9 @@ def parse_query(query: str, limit: int | None = None, offset: int = 0):
     Returns (tokens, limit, offset); tokens emptied by extraction drop.
     Note: '&' is both the AND operator (whitespace-separated) and the
     modifier marker (inside a token) — the tokenizer already split
-    standalone '&', so only embedded '&limit'/' &offset' reach here."""
+    standalone '&', so only embedded '&limit'/' &offset' reach here.
+    A limit or offset outside [0, 2^31 - 1] (Spark's LIMIT/OFFSET range)
+    raises ValueError naming the modifier."""
     out: list[str] = []
     for t in tokenize(query):
         if t not in ("|", "&") and '"' not in t:
@@ -106,6 +113,9 @@ def parse_query(query: str, limit: int | None = None, offset: int = 0):
             t, offset = extract_control_modifier(t, "offset", offset)
         if t:
             out.append(t)
+    for name, v in (("limit", limit), ("offset", offset)):
+        if v is not None and not 0 <= v <= _MAX_INT:
+            raise ValueError(f"&{name} must be in [0, {_MAX_INT}], got {v}")
     return out, limit, offset
 
 
@@ -117,8 +127,32 @@ JSON_DETAILS_COL = "details"
 
 _SEP_RE = re.compile(r"^([^:=]*)([:=])(.*)$", re.DOTALL)
 
+#: the star's keyword-hit flag column (TRUE where a bare term equals a
+#: keyword of the row's index_id, NULL otherwise)
+_KW_HIT = "_kw_hit"
 
-def _term_predicate(term: str, default_fields: tuple[str, ...] = DEFAULT_FIELDS) -> Column:
+
+def _sql_str(s: str) -> str:
+    """``s`` as a Spark SQL string literal: ``\\`` doubled first, then
+    ``'`` escaped, so the parser hands back exactly ``s``."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _sql_col(name: str) -> str:
+    """``name`` as a backtick-quoted column reference (a backtick in the
+    name is doubled)."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _unquote(term: str) -> str:
+    """A quoted phrase's text (``\\"`` and ``\\\\`` unescaped); other
+    terms as they are."""
+    if term.startswith('"') and term.endswith('"') and len(term) >= 2:
+        return term[1:-1].replace('\\"', '"').replace("\\\\", "\\")
+    return term
+
+
+def _term_sql(term: str, default_fields: tuple[str, ...]) -> str:
     field = None
     json_path = None
     details_probe = False
@@ -135,43 +169,37 @@ def _term_predicate(term: str, default_fields: tuple[str, ...] = DEFAULT_FIELDS)
                 field, term = FIELD_ALIASES[low], rest
             # bare 'limit:'/'offset:' specifiers fall through as literal
             # terms (the &-marked forms are the control-modifier path)
-    if term.startswith('"') and term.endswith('"') and len(term) >= 2:
-        term = term[1:-1].replace('\\"', '"').replace("\\\\", "\\")
-    like = f"%{term.lower()}%"
+    term = _unquote(term)
+    # LIKE's escape character stays the default backslash, as with Column.like
+    like = "LIKE " + _sql_str(f"%{term.lower()}%")
     if json_path:
-        return F.lower(F.get_json_object(F.col(JSON_DETAILS_COL), json_path)).like(like)
+        return f"lower(get_json_object({_sql_col(JSON_DETAILS_COL)}, {_sql_str(json_path)})) {like}"
     if details_probe:
         # 'details:v' probes the whole semi-structured blob as text
         # (WebObjects.details::text LIKE, sql_templates.go)
-        return F.lower(F.col(JSON_DETAILS_COL).cast("string")).like(like)
-    if field:
-        return F.lower(F.col(field)).like(like)
-    pred = F.lit(False)
-    for f_ in default_fields:
-        pred = pred | F.lower(F.col(f_)).like(like)
-    return pred
+        return f"lower(CAST({_sql_col(JSON_DETAILS_COL)} AS STRING)) {like}"
+    fields = (field,) if field else default_fields
+    if not fields:
+        return "false"
+    return "(" + " OR ".join(f"lower({_sql_col(f)}) {like}" for f in fields) + ")"
 
 
-def _compile_tokens(
-    tokens: list[str], default_fields: tuple[str, ...] = DEFAULT_FIELDS
-) -> Column:
+def _predicate_sql(tokens: list[str], default_fields: tuple[str, ...] = DEFAULT_FIELDS) -> str:
+    """The token stream as one SQL boolean expression: an OR of
+    AND-groups. The JVM parses it in one call, instead of one py4j round
+    trip per Column node."""
     or_groups: list[list[str]] = [[]]
     for t in tokens:
         if t == "|":
             or_groups.append([])
-        elif t in ("&", "&&"):
-            continue
-        else:
+        elif t not in ("&", "&&"):
             or_groups[-1].append(t)
-    result = F.lit(False)
-    for group in or_groups:
-        if not group:
-            continue
-        g = F.lit(True)
-        for term in group:
-            g = g & _term_predicate(term, default_fields)
-        result = result | g
-    return result
+    ors = [
+        "(" + " AND ".join(_term_sql(term, default_fields) for term in group) + ")"
+        for group in or_groups
+        if group
+    ]
+    return " OR ".join(ors) or "false"
 
 
 def compile_search(query: str) -> Column:
@@ -182,17 +210,24 @@ def compile_search(query: str) -> Column:
     (use :func:`search` or :func:`parse_query` to consume them).
     """
     tokens, _, _ = parse_query(query)
-    return _compile_tokens(tokens)
+    return F.expr(_predicate_sql(tokens))
 
 
 def search(pages: DataFrame, query: str, limit: int = 10, offset: int = 0) -> DataFrame:
-    """DISTINCT + recency order + limit/offset, per the reference
-    templates (sql_templates.go:6,49; search.go:112-130 defaults —
-    reference default limit is 10). In-query ``&limit``/``&offset``
-    control modifiers override the arguments (tokenizer.go:329-330)."""
+    """Recency order + limit/offset, per the reference templates
+    (sql_templates.go:6,49; search.go:112-130 defaults — reference
+    default limit is 10). In-query ``&limit``/``&offset`` control
+    modifiers override the arguments (tokenizer.go:329-330).
+
+    Precondition: ``pages`` holds one row per ``doc_id`` — the
+    SearchIndex analog (``ON CONFLICT(page_url)``), as
+    ``spans.parse_documents`` yields from a ``doc_id``-keyed corpus. No
+    join fans rows out here, so the templates' DISTINCT has nothing to
+    remove and is not applied: the plan is scan → filter →
+    TakeOrderedAndProject, one job and no shuffle. Dedup an unkeyed
+    input before calling."""
     tokens, limit, offset = parse_query(query, limit, offset)
-    out = pages.filter(_compile_tokens(tokens)).dropDuplicates(["doc_id"])
-    out = out.orderBy(F.desc("doc_id"))
+    out = pages.filter(_predicate_sql(tokens)).orderBy(F.desc("doc_id"))
     if offset:
         out = out.offset(offset)
     return out.limit(limit)
@@ -209,9 +244,7 @@ def bare_terms(tokens: list[str]) -> list[str]:
         m = _SEP_RE.match(t)
         if m and m.group(3) and is_valid_specifier(m.group(1)):
             continue
-        if t.startswith('"') and t.endswith('"') and len(t) >= 2:
-            t = t[1:-1].replace('\\"', '"').replace("\\\\", "\\")
-        out.append(t.lower())
+        out.append(_unquote(t).lower())
     return out
 
 
@@ -242,10 +275,13 @@ def search_entity_star(
 
     Plan shape: every join is an equi-join (bridge/index_id/keyword/
     source_id); sources is a broadcast dimension; DISTINCT is one
-    shuffle on the (small) projection.
+    shuffle on the (small) projection. The keyword chain is pre-filtered
+    to the query's bare terms and broadcast as an ``index_id`` flag; a
+    query with no bare terms does not read ``keyword_index`` at all. The
+    WHERE clause is one SQL expression string.
     """
     tokens, _, _ = parse_query(query)
-    pred = _compile_tokens(tokens, default_fields=si_fields)
+    cond = _predicate_sql(tokens, si_fields)
 
     if bridge is not None:
         ent_keys = [c for c in bridge.columns if c in entity.columns]
@@ -254,27 +290,29 @@ def search_entity_star(
         # Screenshots-shaped entities carry index_id directly
         # (sqlScreenshotBody: `s.index_id = si.index_id`, no bridge table)
         df = entity
-    df = df.join(search_index.select("index_id", *si_fields), "index_id")
+    df = df.join(search_index.selectExpr("index_id", *map(_sql_col, si_fields)), "index_id")
 
-    kw_pred = F.lit(False)
-    if keyword_index is not None:
-        bares = bare_terms(tokens)
-        df = df.join(keyword_index.select("index_id", "keyword"), "index_id", "left")
-        if bares:
-            kw_pred = F.col("keyword").isin(*bares)
+    bares = bare_terms(tokens) if keyword_index is not None else []
+    if bares:
+        # keyword equality only ever matches a bare term, so only those
+        # keyword rows can set the flag; duplicate hits per index_id fan
+        # rows out, which the DISTINCT projection absorbs
+        hits = keyword_index.filter(
+            f"keyword IN ({', '.join(map(_sql_str, bares))})"
+        ).selectExpr("index_id", f"true AS {_KW_HIT}")
+        df = df.join(F.broadcast(hits), "index_id", "left")
+        cond = f"({cond}) OR {_KW_HIT}"
 
-    proj: list[Column] = []
+    proj: list[str] = []
     if source_search_index is not None and sources is not None:
         df = df.join(source_search_index.select("index_id", "source_id"), "index_id", "left")
         df = df.join(
             F.broadcast(sources.select("source_id", "source_uid")), "source_id", "left"
         )
-        proj.append(F.coalesce(F.col("source_uid"), F.lit("")).alias("source_uid"))
-    proj.extend(F.col(c) for c in entity_cols)
+        proj.append("coalesce(source_uid, '') AS source_uid")
+    proj.extend(_sql_col(c) for c in entity_cols)
 
-    guard = (
-        F.col(link_col).isNotNull() & (F.col(link_col) != "")
-        if link_col is not None
-        else F.lit(True)
-    )
-    return df.filter(guard & (pred | kw_pred)).select(*proj).distinct()
+    if link_col is not None:
+        link = _sql_col(link_col)
+        cond = f"{link} IS NOT NULL AND {link} != '' AND ({cond})"
+    return df.filter(cond).selectExpr(*proj).distinct()
