@@ -184,19 +184,15 @@ def test_keyed_pages_make_distinct_redundant(spark):
     [("t&limit:-1", "limit"), ("t&offset:-2", "offset"),
      ("t&limit:99999999999", "limit"), ("t&offset=2147483648", "offset")],
 )
-def test_out_of_range_modifier_is_rejected(query, name):
+def test_out_of_range_modifier_is_rejected(spark, query, name):
+    """Rejected while parsing, before Spark plans a LIMIT/OFFSET it
+    cannot take."""
     with pytest.raises(ValueError, match=f"&{name}"):
         parse_query(query, limit=10)
+    with pytest.raises(ValueError, match=f"&{name}"):
+        search(spark.createDataFrame(ROWS, SCHEMA), query)
 
 
 def test_modifier_range_bounds_accepted():
     assert parse_query("t&limit:2147483647 &offset:0", limit=10)[1:] == (2147483647, 0)
     assert parse_query("t&limit:0", limit=10)[1] == 0
-
-
-def test_search_rejects_out_of_range_before_planning(spark):
-    pages = spark.createDataFrame(ROWS, SCHEMA)
-    for query, name in [("t&limit:-1", "limit"), ("t&offset:-2", "offset"),
-                        ("t&limit:99999999999", "limit")]:
-        with pytest.raises(ValueError, match=f"&{name}"):
-            search(pages, query)
