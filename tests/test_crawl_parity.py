@@ -256,17 +256,44 @@ def test_many_sources_no_plan_blowup(spark):
     assert int(tot["l"]) >= n_src  # 2 links per fetched seed page
 
 
+def test_counters_collect_cap(spark, monkeypatch):
+    """``CrawlResult.counters`` collects at most its cap of sources and
+    refuses past it; ``counters_df`` stays readable either way."""
+    from thecrowler_spark.operators.frontier import CrawlResult
+
+    res = _spark_result(
+        spark, small_corpus(CorpusSpec(n_hosts=2, pages_per_host=6)), CrawlConfig(max_depth=1)
+    )
+    monkeypatch.setattr(CrawlResult, "COUNTERS_COLLECT_CAP", 2)
+    assert sorted(res.counters) == [1, 2]
+    monkeypatch.setattr(CrawlResult, "COUNTERS_COLLECT_CAP", 1)
+    with pytest.raises(ValueError, match="counters_df"):
+        res.counters
+    assert res.counters_df.count() == 2
+
+
 def test_crawl_parity_alternative_links(spark):
     """alternative_links from Sources.config (crawler.go:318-353): appended
     to the initial links when absent, deduped against extracted links,
-    crawled in config order — engine vs independent oracle."""
+    crawled in config order — engine vs independent oracle. Sources
+    whose config adds nothing (NULL, ``{}``, an empty list, no
+    ``crawling_config``) crawl their extracted links alone."""
     import json
 
-    corpus = small_corpus(CorpusSpec(n_hosts=2, pages_per_host=10))
     from thecrowler_spark.sources.corpus import page_url
 
+    no_alts = [
+        None,
+        "{}",
+        json.dumps({"crawling_config": {"alternative_links": []}}),
+        json.dumps({"other": 1}),
+    ]
+    corpus = small_corpus(CorpusSpec(n_hosts=2 + len(no_alts), pages_per_host=10))
     for s in corpus["seeds"]:
         h = s["source_id"] - 1
+        if h >= 2:
+            s["config"] = no_alts[h - 2]
+            continue
         s["config"] = json.dumps(
             {
                 "crawling_config": {

@@ -54,6 +54,29 @@ def test_kill_and_resume_matches_uninterrupted(spark, tmp_path):
         assert res_resume.counters[sid] == c, (sid, res_resume.counters[sid], c)
 
 
+def test_fresh_run_does_not_resume_earlier_rounds(spark, tmp_path):
+    """A run that is not resumed starts its run_id over: a later resume
+    continues from ITS rounds, not from the deeper rounds an earlier run
+    under the same run_id (with other settings) left in the work dir."""
+    corpus = small_corpus(CorpusSpec(n_hosts=2, pages_per_host=10))
+    dfs = corpus_to_spark(spark, corpus)
+    wd = str(tmp_path / "state")
+    full_cfg = CrawlConfig(max_depth=4, max_rounds=10)
+
+    def order(res):
+        return sorted(tuple(r) for r in res.crawl_order.collect())
+
+    def run(cfg, resume=False):
+        eng = CrawlEngine(spark, dfs["documents"], cfg=cfg, work_dir=wd)
+        return eng.run(dfs["seeds"], run_id="reused", resume=resume)
+
+    want = order(CrawlEngine(spark, dfs["documents"], cfg=full_cfg).run(dfs["seeds"]))
+    earlier = order(run(CrawlConfig(max_depth=4, max_rounds=4, unwanted_patterns=(r"/p[1-4]$",))))
+    assert earlier != want  # non-vacuous: the earlier run's rounds differ
+    run(CrawlConfig(max_depth=4, max_rounds=1))
+    assert order(run(full_cfg, resume=True)) == want
+
+
 def test_lake_compact_preserves_data(spark, tmp_path):
     """compact() = rewrite_data_files analog: fewer files, same rows,
     history still time-travelable until expired."""

@@ -589,3 +589,42 @@ def test_search_star_prefilters_keyword_chain(spark, tmp_path):
     ]
     assert "keyword#" not in _plan(star("title:1"))
     assert [r["page_url"] for r in star("title:1").collect()] == ["https://h.example.com/1"]
+
+
+def test_crawl_commits_have_no_outer_join(spark):
+    """Every later round's counters commit is one union aggregate — no
+    full outer join, exactly one exchange — and round 0's seed links
+    are one array expression over the fetched seeds: no join in the
+    ``r0/seed_links`` plan that ran."""
+    from thecrowler_spark.operators.frontier import CrawlConfig, CrawlEngine
+    from thecrowler_spark.sources.corpus import CorpusSpec, corpus_to_spark, small_corpus
+
+    plans: dict[int, str] = {}
+
+    class _CounterPlans(CrawlEngine):
+        def _ckpt(self, df, run_id, rnd, name):
+            if name == "counters":
+                plans[rnd] = _plan(df)
+            return super()._ckpt(df, run_id, rnd, name)
+
+    dfs = corpus_to_spark(spark, small_corpus(CorpusSpec(n_hosts=2, pages_per_host=8)))
+    assert "config" in dfs["seeds"].columns  # the alternative_links path is planned
+    eng = _CounterPlans(spark, dfs["documents"], cfg=CrawlConfig(max_depth=2, max_rounds=4))
+    eng.run(dfs["seeds"], run_id="shapes")
+    assert sorted(plans) == [0, 1, 2]
+    for rnd in (1, 2):
+        plan = plans[rnd]
+        assert "FullOuter" not in plan, plan
+        assert plan.count("Exchange") == 1, plan
+
+    jsc = spark.sparkContext._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty(30_000)
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    seed_links = [
+        e.physicalPlanDescription()
+        for e in (execs.apply(i) for i in range(execs.size()))
+        if e.description() == "crawl/shapes/r0/seed_links"
+    ]
+    assert seed_links
+    for plan in seed_links:
+        assert "Join" not in plan, plan

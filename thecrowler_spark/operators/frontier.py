@@ -32,16 +32,23 @@ Fetching over the closed-world corpus is an equi-join
 ``frontier.link == documents.doc_id`` (SURVEY.md S3: no live HTTP in
 scope — the synthetic corpus IS the web).
 
-State (visited / frontier / pages / lineage) is checkpointed to
-parquet snapshot directories every round via :class:`..sources.lake.LakeTable`
-— the local stand-in for Iceberg MERGE/snapshots; a run is resumable
-from the last committed round (reference analog: the Sources status
-machine + processing-timeout re-claims, postgresql-setup.pgsql:272-307,2881-2884).
+State is committed every round as parquet directories
+``{work_dir}/{run_id}/r<k>/<table>`` — append-only ``pages_delta`` and
+``visited_delta``, whole ``frontier``, ``counters`` and ``deferred`` —
+then a ``manifest.json`` marks the round committed (the local stand-in
+for Iceberg appends and snapshots; without a ``work_dir`` the state is
+local checkpoints). A run is resumable from its last committed round
+(reference analog: the Sources status machine + processing-timeout
+re-claims, postgresql-setup.pgsql:272-307,2881-2884).
 """
 
 from __future__ import annotations
 
+import functools
+import glob
 import json
+import os
+import shutil
 import time
 from dataclasses import dataclass, field
 from typing import Any
@@ -160,6 +167,21 @@ def _obs_int(obs: Observation) -> dict[str, int]:
     return {k: int(v or 0) for k, v in obs.get.items()}
 
 
+def _sum_counters(*parts: DataFrame) -> DataFrame:
+    """Per-source counters as one aggregate: each part is ``source_id``
+    plus any of :data:`COUNTER_FIELDS` (0 where it lacks one); the parts
+    are unioned and summed per source — no join, one exchange."""
+
+    def fields(p: DataFrame) -> DataFrame:
+        return p.select("source_id", *[
+            (F.col(k) if k in p.columns else F.lit(0)).cast("long").alias(k)
+            for k in COUNTER_FIELDS
+        ])
+
+    rows = functools.reduce(DataFrame.unionByName, map(fields, parts))
+    return rows.groupBy("source_id").agg(*[F.sum(k).alias(k) for k in COUNTER_FIELDS])
+
+
 def _seen_key() -> F.Column:
     """``_skey`` = ``source_id\x00norm_url``: the per-source seen key
     the cuckoo filter hashes."""
@@ -190,17 +212,14 @@ class CrawlResult:
         only; fleet-scale consumers read :attr:`counters_df`. Refuses
         to materialize more than :data:`COUNTERS_COLLECT_CAP` sources
         (use ``counters_df`` or :meth:`counters_sample`)."""
-        n = self.counters_df.limit(self.COUNTERS_COLLECT_CAP + 1).count()
-        if n > self.COUNTERS_COLLECT_CAP:
+        rows = self.counters_df.limit(self.COUNTERS_COLLECT_CAP + 1).collect()
+        if len(rows) > self.COUNTERS_COLLECT_CAP:
             raise ValueError(
                 f"counters would collect > {self.COUNTERS_COLLECT_CAP} "
                 "sources to the driver; read counters_df (distributed) or "
                 "counters_sample(n)"
             )
-        return {
-            r["source_id"]: {k: int(r[k]) for k in COUNTER_FIELDS}
-            for r in self.counters_df.collect()
-        }
+        return {r["source_id"]: {k: int(r[k]) for k in COUNTER_FIELDS} for r in rows}
 
     def counters_sample(self, n: int = 1000) -> dict[int, dict[str, int]]:
         """First ``n`` sources by id — bounded driver materialization."""
@@ -587,6 +606,7 @@ class CrawlEngine:
             F.col("url").alias("source_url"),
             "restricted",
             "priority",
+            *(["config"] if "config" in seeds.columns else []),
         ).persist()
 
         self._prior_seen = (
@@ -615,65 +635,50 @@ class CrawlEngine:
 
         # ---- depth 0: CrawlInitialURL (web.go:912-993) ----
         t0 = time.time()
-        seed_fetch = src.join(
-            self.fetch_side.withColumnRenamed("doc_id", "_doc"),
-            src["source_url"] == F.col("_doc"),
-            "left",
-        )
+        if self.work_dir:
+            # a run that starts at round 0 owns its state directory: the
+            # rounds of an earlier run under this run_id must not stay
+            # behind for a later resume to load
+            shutil.rmtree(f"{self.work_dir}/{run_id}", ignore_errors=True)
         # every depth-0 table is a projection of the fetched seeds and
         # their links: materialize each once instead of re-planning them
         # under every commit
         with self._phase(run_id, 0, "seed"):
-            seed_ok = seed_fetch.filter(F.col("_doc").isNotNull()).localCheckpoint(eager=True)
-        # initial links keep page_url = source URL (web.go:949-951)
-        frontier = (
-            seed_ok.select(
-                "source_id",
-                "source_url",
-                "restricted",
-                "priority",
-                F.posexplode_outer("links").alias("seq", "link"),
-            )
-            .filter(F.col("link").isNotNull())
-            .withColumn("page_url", F.col("source_url"))
-        )
-        # alternative_links from Sources.config JSON appended to the
-        # initial links if not already present — exact string match,
-        # config order, AFTER the extracted links (crawler.go:318-353;
-        # array_distinct keeps first occurrence like the growing
-        # initialLinks check). All Spark-side: from_json + anti-join.
-        if "config" in seeds.columns:
-            alt_arr = F.from_json(
+            seed_ok = src.join(
+                self.fetch_side, src["source_url"] == self.fetch_side["doc_id"]
+            ).localCheckpoint(eager=True)
+        # initial links keep page_url = source URL (web.go:949-951). The
+        # alternative_links of Sources.config follow them in config
+        # order, each once and only if not already extracted — exact
+        # string match, like the growing initialLinks check
+        # (crawler.go:318-353); array_except keeps first occurrences.
+        links = F.coalesce(F.array_compact("links"), F.array())
+        if "config" in src.columns:
+            alts = F.from_json(
                 F.col("config"),
                 "struct<crawling_config:struct<alternative_links:array<string>>>",
             )["crawling_config"]["alternative_links"]
-            alt = (
-                seed_ok.join(
-                    seeds.select("source_id", F.array_distinct(alt_arr).alias("_alts")),
-                    "source_id",
-                )
-                .select(
-                    "source_id",
-                    "source_url",
-                    "restricted",
-                    "priority",
-                    F.posexplode("_alts").alias("_apos", "link"),
-                )
-                .withColumn("page_url", F.col("source_url"))
-                .join(frontier.select("source_id", "link"), ["source_id", "link"], "left_anti")
-            )
-            base_counts = frontier.groupBy("source_id").agg(F.count("*").alias("_n"))
-            alt = (
-                alt.join(base_counts, "source_id", "left")
-                .withColumn("seq", F.coalesce(F.col("_n"), F.lit(0)).cast("int") + F.col("_apos"))
-                .drop("_n", "_apos")
-            )
-            frontier = frontier.unionByName(alt.select(*frontier.columns))
+            links = F.concat(links, F.array_except(F.coalesce(alts, F.array()), links))
+        frontier = seed_ok.select(
+            "source_id",
+            "source_url",
+            "restricted",
+            "priority",
+            F.posexplode(links).alias("seq", "link"),
+            F.col("source_url").alias("page_url"),
+        )
         with self._phase(run_id, 0, "seed_links"):
             frontier = frontier.localCheckpoint(eager=True)
-        # TotalLinks stores the initial count BEFORE the restricted gate
-        # (crawler.go:412), so aggregate first …
-        initial_links = frontier.groupBy("source_id").agg(F.count("*").alias("links"))
+        # counters live as a small DataFrame for the whole crawl — never
+        # as a driver dict (a 10^5-10^6-source claim embedded in plan
+        # literals or collect()ed per round is a driver OOM; SURVEY §4).
+        # Every claimed source gets a row; TotalLinks counts the initial
+        # links BEFORE the restricted gate (crawler.go:412) …
+        counters = _sum_counters(
+            src.select("source_id"),
+            seed_ok.select("source_id", F.lit(1).alias("pages")),
+            frontier.select("source_id", F.lit(1).alias("links")),
+        )
         # … then: restricted==0 sources never enter the BFS loop (crawler.go:414)
         frontier = self._trap_valve(frontier.filter(F.col("restricted") != 0))
 
@@ -691,24 +696,6 @@ class CrawlEngine:
             visited = seed_vis.join(self._prior_seen, ["source_id", "norm_url"], "left_anti")
         else:
             visited = seed_vis
-        # counters live as a small DataFrame for the whole crawl — never
-        # as a driver dict (a 10^5-10^6-source claim embedded in plan
-        # literals or collect()ed per round is a driver OOM; SURVEY §4)
-        pages0 = pages.groupBy("source_id").agg(F.count("*").alias("pages"))
-        counters = (
-            src.select("source_id")
-            .join(pages0, "source_id", "left")
-            .join(initial_links, "source_id", "left")
-            .select(
-                "source_id",
-                F.coalesce("pages", F.lit(0)).cast("long").alias("pages"),
-                F.coalesce("links", F.lit(0)).cast("long").alias("links"),
-                F.lit(0).cast("long").alias("skipped"),
-                F.lit(0).cast("long").alias("duplicates"),
-                F.lit(0).cast("long").alias("errors"),
-            )
-        )
-
         # depth-0 state is the base delta of the append-only page/visited logs
         pages = self._ckpt_delta(None, pages, run_id, 0, "pages")
         visited = self._commit_visited(run_id, 0, visited)
@@ -867,13 +854,7 @@ class CrawlEngine:
             pages = self._ckpt_delta(pages, new_pages, run_id, depth, "pages")
             visited = self._commit_visited(run_id, depth, visited_delta)
 
-            stats = rt.groupBy("source_id").agg(
-                *[
-                    F.sum((category == c).cast("long")).alias(k)
-                    for k, c in _STAT_CATEGORIES
-                ]
-            )
-            new_links = self._next_links(rt, counters, stats)
+            new_links = self._next_links(rt)
             frontier, frontier_obs = _observed(
                 self._trap_valve(new_links), F.count(F.lit(1)).alias("rows")
             )
@@ -888,28 +869,22 @@ class CrawlEngine:
                 )
             n_deferred = tot["deferred"]
 
-            # per-source links: the committed frontier, counted before
-            # the trap valve (capped links were still discovered)
-            links = (new_links if cfg.trap_cap else frontier).groupBy("source_id").agg(
-                F.count("*").cast("long").alias("links")
+            # the round's rows add their categories to the running
+            # counters; per-source links are the committed frontier,
+            # counted before the trap valve (capped links were still
+            # discovered)
+            counters = self._ckpt(
+                _sum_counters(
+                    counters,
+                    rt.select("source_id", *[
+                        (category == c).cast("long").alias(k) for k, c in _STAT_CATEGORIES
+                    ]),
+                    (new_links if cfg.trap_cap else frontier).select(
+                        "source_id", F.lit(1).alias("links")
+                    ),
+                ),
+                run_id, depth, "counters",
             )
-            # merge the round's per-source stats into the running
-            # counters — a full outer join + coalesce sums, all Spark-side
-            merged = (
-                counters.alias("c")
-                .join(stats.join(links, "source_id", "full").alias("s"), "source_id", "full")
-                .select(
-                    "source_id",
-                    *[
-                        (
-                            F.coalesce(F.col(f"c.{k}"), F.lit(0))
-                            + F.coalesce(F.col(f"s.{k}"), F.lit(0))
-                        ).alias(k)
-                        for k in COUNTER_FIELDS
-                    ],
-                )
-            )
-            counters = self._ckpt(merged, run_id, depth, "counters")
 
             lineage.append(
                 {
@@ -988,11 +963,12 @@ class CrawlEngine:
         ``category``, ``fetch_seq`` (fetch_ok rows), ``_doc_links``
         (fetch_ok rows), and ``_next_attempt``/``_next_ok`` (the seq and
         outcome of the next attempted row, for skipped-link
-        resurrection). Every state delta of the round is a filter or
-        projection of it. Returns the table and the round's totals,
-        observed while the table is materialized: rows per category
-        (``pages`` = fetch_ok), ``rows``, and the table's non-empty
-        ``partitions`` and ``max_partition_rows``.
+        resurrection), plus ``_pages_after`` (the source's TotalPages
+        after the level) under ``max_links``. Every state delta of the
+        round is a filter or projection of it. Returns the table and the
+        round's totals, observed while the table is materialized: rows
+        per category (``pages`` = fetch_ok), ``rows``, and the table's
+        non-empty ``partitions`` and ``max_partition_rows``.
 
         ``counters`` is the running per-source counter table (small:
         one row per claimed source); it is broadcast-joined wherever the
@@ -1132,7 +1108,7 @@ class CrawlEngine:
         w_seq = Window.partitionBy(*self._seq_parts()).orderBy("seq")
         if cfg.max_links > 0:
             # max_links cutoff: worker stops once TotalPages reaches the
-            # cap (crawler.go:2203-2206) — guard precedes every job
+            # cap (crawler.go:2203-2206) — guard precedes every job …
             cum_ok = F.coalesce(
                 n_ok.over(w_seq.rowsBetween(Window.unboundedPreceding, -1)), F.lit(0)
             )
@@ -1141,6 +1117,11 @@ class CrawlEngine:
                 .filter(F.col("_processed"))
                 .drop("_processed")
             )
+            # … and TotalPages after the level truncates the next
+            # frontier (_next_links)
+            lv = lv.withColumn("_pages_after", F.col("_pages_before") + n_ok.over(
+                w_seq.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+            ))
 
         # fetch_seq = pages_so_far*S + shard-interleaved index: dense and
         # equal to the reference's TotalPages order when S == 1 (parity);
@@ -1169,6 +1150,7 @@ class CrawlEngine:
             F.when(ok, F.col("_doc_links")).alias("_doc_links"),
             F.col("_next.seq").alias("_next_attempt"),
             F.col("_next.ok").alias("_next_ok"),
+            *(["_pages_after"] if cfg.max_links > 0 else []),
             # partition id (high bits) + record number within it: the
             # table's own layout, for the lineage row's skew metrics
             F.monotonically_increasing_id().alias("_mid"),
@@ -1188,11 +1170,12 @@ class CrawlEngine:
             rt = rt.localCheckpoint(eager=True)
         return rt, _obs_int(obs)
 
-    def _next_links(self, rt: DataFrame, counters: DataFrame, stats: DataFrame) -> DataFrame:
+    def _next_links(self, rt: DataFrame) -> DataFrame:
         """The round's discovered links in next-frontier order: each
         fetched page's extracted links, with the skipped links that
         resurrect onto it, numbered per source; MaxLinks-truncated."""
         cfg = self.cfg
+        keep = ["_pages_after"] if cfg.max_links > 0 else []
         extracted = rt.filter(F.col("category") == CAT_FETCH_OK).select(
             "source_id",
             "source_url",
@@ -1202,6 +1185,7 @@ class CrawlEngine:
             F.lit(0).alias("_res"),
             F.posexplode_outer("_doc_links").alias("_pos", "link"),
             F.col("url_link").alias("page_url"),
+            *keep,
         ).filter(F.col("link").isNotNull())
         resurrected = rt.filter((F.col("category") == CAT_SKIP) & F.col("_next_ok")).select(
             "source_id",
@@ -1213,6 +1197,7 @@ class CrawlEngine:
             F.col("seq").alias("_pos"),
             F.col("link"),
             F.col("page_url"),
+            *keep,
         )
 
         new_links = extracted.unionByName(resurrected)
@@ -1220,25 +1205,9 @@ class CrawlEngine:
         new_links = new_links.withColumn("seq", self._seq_expr(F.row_number().over(w_order)))
 
         # MaxLinks prefix truncation AFTER the level (crawler.go:475-483):
-        # keep first (max_links - TotalPages_after) per source —
-        # TotalPages_after = running counter + this round's fetches, a
-        # broadcast join of two small per-source tables.
+        # keep the first (max_links - TotalPages_after) per source
         if cfg.max_links > 0:
-            pages_after = (
-                counters.select("source_id", F.col("pages").alias("_pb"))
-                .join(stats.select("source_id", F.col("pages").alias("_ps")), "source_id", "full")
-                .select(
-                    "source_id",
-                    (F.coalesce("_pb", F.lit(0)) + F.coalesce("_ps", F.lit(0))).alias(
-                        "_pages_after"
-                    ),
-                )
-            )
-            new_links = new_links.join(F.broadcast(pages_after), "source_id", "left")
-            budget_col = F.lit(cfg.max_links) - F.coalesce(F.col("_pages_after"), F.lit(0))
-            new_links = new_links.filter(
-                F.col("seq") < F.greatest(budget_col, F.lit(0))
-            ).drop("_pages_after")
+            new_links = new_links.filter(F.col("seq") < F.lit(cfg.max_links) - F.col("_pages_after"))
         return new_links.select(*FRONTIER_COLS)
 
     # ------------------------------------------------------- checkpoint
@@ -1258,9 +1227,6 @@ class CrawlEngine:
             return self.spark.read.schema(df.schema).parquet(path)
 
     def _delta_dirs(self, run_id: str, up_to_round: int, name: str) -> list[str]:
-        import glob
-        import os
-
         dirs = []
         for d in sorted(glob.glob(f"{self.work_dir}/{run_id}/r*/{name}_delta")):
             # the round is the delta dir's PARENT component ("r0007") —
@@ -1300,13 +1266,10 @@ class CrawlEngine:
         O(1) regardless of claim size."""
         if not self.work_dir:
             return
-        import builtins
-        import os
-
         path = f"{self.work_dir}/{run_id}/r{rnd:04d}/manifest.json"
         os.makedirs(os.path.dirname(path), exist_ok=True)
         tmp = path + ".tmp"
-        with builtins.open(tmp, "w") as f:
+        with open(tmp, "w") as f:
             json.dump({"round": rnd, "depth": depth}, f)
         os.replace(tmp, path)
 
@@ -1314,8 +1277,6 @@ class CrawlEngine:
         """Load the newest committed round's state (kill-and-resume)."""
         if not self.work_dir:
             return None
-        import glob
-        import os
 
         def _rounds(dirs: list[str]) -> set[int]:
             return {int(os.path.basename(os.path.dirname(d))[1:]) for d in dirs}
@@ -1356,7 +1317,5 @@ class CrawlEngine:
 
     def _write_lineage(self, lineage: list[dict[str, Any]], run_id: str) -> None:
         path = f"{self.work_dir}/{run_id}/lineage.json"
-        import builtins
-
-        with builtins.open(path, "w") as f:
+        with open(path, "w") as f:
             json.dump(lineage, f, indent=1)

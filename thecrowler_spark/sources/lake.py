@@ -13,8 +13,10 @@ plain parquet:
   (/root/reference/pkg/crawler/crawler.go:1319-1369 upserts);
 - ``read(snapshot_id)`` = time travel; ``expire_snapshots`` = GC.
 
-Swapping to Iceberg is a sink change only: the engine's state tables
-all go through this interface.
+Swapping to Iceberg is a sink change only for the sinks that go
+through this interface. The crawl engine's per-round state does not: it
+commits plain parquet directories plus a manifest per round (see
+:mod:`..operators.frontier`).
 """
 
 from __future__ import annotations
