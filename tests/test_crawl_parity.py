@@ -311,6 +311,30 @@ def test_crawl_parity_alternative_links(spark):
     _compare(_spark_result(spark, corpus, cfg), _oracle_result(corpus, ocfg))
 
 
+def test_crawl_parity_seed_links_not_truncated(spark):
+    """MaxLinks truncates the links a BFS level discovers, never the
+    seed links (crawler.go:412-414, 475-483). Each seed here has more
+    links than max_links and its first links are skipped (external, the
+    source itself) or duplicates (a page twice, then with a trailing
+    slash): truncated seed links would end the crawl on those and count
+    fewer links."""
+    from thecrowler_spark.sources.corpus import page_url
+
+    corpus = small_corpus(CorpusSpec(n_hosts=2, pages_per_host=10))
+    docs = {d["doc_id"]: d for d in corpus["documents"]}
+    for s in corpus["seeds"]:
+        h = s["source_id"] - 1
+        first = ["https://other0.example.org/x", s["url"], page_url(h, 3), page_url(h, 3),
+                 page_url(h, 3) + "/"]
+        doc = docs[s["url"]]
+        spans = [{"kind": "link", "text": "", "media_ref": u, "offset": 0} for u in first]
+        doc["spans"] = [dict(sp, offset=i) for i, sp in enumerate(spans + doc["spans"])]
+        assert len(O.extract_links(doc["spans"])) > len(first)
+    cfg = CrawlConfig(max_depth=2, max_links=3, max_rounds=6)
+    ocfg = O.OracleConfig(max_depth=2, max_links=3, max_rounds=6)
+    _compare(_spark_result(spark, corpus, cfg), _oracle_result(corpus, ocfg))
+
+
 def test_ordering_shards_same_sets(spark):
     """Mega-source escape hatch (ordering_shards > 1): on a corpus with
     canonical link forms and no skip rules, the fetched page set,

@@ -592,10 +592,10 @@ def test_search_star_prefilters_keyword_chain(spark, tmp_path):
 
 
 def test_crawl_commits_have_no_outer_join(spark):
-    """Every later round's counters commit is one union aggregate — no
-    full outer join, exactly one exchange — and round 0's seed links
-    are one array expression over the fetched seeds: no join in the
-    ``r0/seed_links`` plan that ran."""
+    """Every round's counters commit, round 0's included, is one union
+    aggregate — no full outer join, exactly one exchange — and round 0's
+    frontier is one array expression over the seed table: no join in
+    the ``r0/frontier`` plan that ran."""
     from thecrowler_spark.operators.frontier import CrawlConfig, CrawlEngine
     from thecrowler_spark.sources.corpus import CorpusSpec, corpus_to_spark, small_corpus
 
@@ -612,7 +612,7 @@ def test_crawl_commits_have_no_outer_join(spark):
     eng = _CounterPlans(spark, dfs["documents"], cfg=CrawlConfig(max_depth=2, max_rounds=4))
     eng.run(dfs["seeds"], run_id="shapes")
     assert sorted(plans) == [0, 1, 2]
-    for rnd in (1, 2):
+    for rnd in (0, 1, 2):
         plan = plans[rnd]
         assert "FullOuter" not in plan, plan
         assert plan.count("Exchange") == 1, plan
@@ -620,11 +620,11 @@ def test_crawl_commits_have_no_outer_join(spark):
     jsc = spark.sparkContext._jsc.sc()
     jsc.listenerBus().waitUntilEmpty(30_000)
     execs = spark._jsparkSession.sharedState().statusStore().executionsList()
-    seed_links = [
+    frontier0 = [
         e.physicalPlanDescription()
         for e in (execs.apply(i) for i in range(execs.size()))
-        if e.description() == "crawl/shapes/r0/seed_links"
+        if e.description() == "crawl/shapes/r0/frontier"
     ]
-    assert seed_links
-    for plan in seed_links:
+    assert frontier0
+    for plan in frontier0:
         assert "Join" not in plan, plan

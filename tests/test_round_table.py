@@ -94,10 +94,11 @@ class _RoundCounters(CrawlEngine):
 
 @pytest.mark.parametrize("with_work_dir", [False, True], ids=["local", "work_dir"])
 def test_lineage_rows_equal_counter_changes(spark, tmp_path, with_work_dir):
-    """Each lineage round reports what that round added to the per-source
-    counters — fetched = pages, skipped, duplicates, errors — and its
-    skew figures describe a non-empty round table. A host budget that
-    binds puts deferred rows in the rounds, which no counter counts."""
+    """Each lineage round, round 0 included, reports what that round
+    added to the per-source counters — fetched = pages, skipped,
+    duplicates, errors — and its skew figures describe a non-empty
+    round table. A host budget that binds puts deferred rows in the
+    rounds, which no counter counts."""
     corpus = small_corpus(CorpusSpec(n_hosts=3, pages_per_host=12, skew_host_factor=3))
     dfs = corpus_to_spark(spark, corpus)
     budgets = spark.createDataFrame([("h0.example.com", 2)], "host string, max_fetches_per_round int")
@@ -111,9 +112,12 @@ def test_lineage_rows_equal_counter_changes(spark, tmp_path, with_work_dir):
     lin = {r["round"]: r for r in res.lineage}
     tot = eng.round_totals
     assert sorted(lin) == sorted(tot) and len(lin) == 4
-    assert lin[0]["fetched"] == tot[0]["pages"]
-    for rnd in range(1, 4):
-        change = {k: tot[rnd][k] - tot[rnd - 1][k] for k in tot[rnd]}
+    # round 0 changes the claimed sources' zeros: its seed table holds
+    # only fetched seeds
+    zero = dict.fromkeys(tot[0], 0)
+    assert lin[0]["skipped"] == lin[0]["duplicates"] == lin[0]["errors"] == 0, lin[0]
+    for rnd in range(4):
+        change = {k: tot[rnd][k] - (tot[rnd - 1] if rnd else zero)[k] for k in tot[rnd]}
         got = {
             "pages": lin[rnd]["fetched"],
             "skipped": lin[rnd]["skipped"],
@@ -159,7 +163,8 @@ def test_engine_names_its_phases_in_job_descriptions(spark):
         sc.setLocalProperty("spark.jobGroup.id", None)
     new = [j for j in jobs() if j.jobId() > before]
     descs = {j.description().get() for j in new if j.description().isDefined()}
-    for rnd, phase in [(0, "pages"), (0, "frontier"), (0, "counters"), (1, "classify"),
+    for rnd, phase in [(0, "seed"), (0, "pages"), (0, "visited"), (0, "frontier"),
+                       (0, "counters"), (1, "classify"),
                        (1, "pages"), (1, "visited"), (1, "frontier"), (2, "counters")]:
         assert f"crawl/named/r{rnd}/{phase}" in descs, (rnd, phase, sorted(descs))
     assert {j.jobGroup().get() for j in new} == {"caller-group"}

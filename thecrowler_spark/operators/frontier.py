@@ -32,6 +32,12 @@ Fetching over the closed-world corpus is an equi-join
 ``frontier.link == documents.doc_id`` (SURVEY.md S3: no live HTTP in
 scope — the synthetic corpus IS the web).
 
+Every round, depth 0 included, is one checkpointed **round table** and
+one commit (:meth:`CrawlEngine._commit_round`) that derives every state
+delta from it. Round 0 (CrawlInitialURL, web.go:912-993) is the seed
+table: one fetch_ok row per fetched seed whose page links are the seed
+links; BFS rounds classify their level (:meth:`CrawlEngine._process_level`).
+
 State is committed every round as parquet directories
 ``{work_dir}/{run_id}/r<k>/<table>`` — append-only ``pages_delta`` and
 ``visited_delta``, whole ``frontier``, ``counters`` and ``deferred`` —
@@ -188,6 +194,20 @@ def _seen_key() -> F.Column:
     return F.concat_ws(
         "\x00", F.col("source_id").cast("string"), F.col("norm_url")
     ).alias("_skey")
+
+
+@dataclass
+class _Live:
+    """A run's state between rounds: the committed pages log, the
+    running counters, and the next round's frontier and deferred rows
+    with their sizes."""
+
+    counters: DataFrame
+    pages: DataFrame | None = None
+    frontier: DataFrame | None = None
+    deferred: DataFrame | None = None
+    n_frontier: int = 0
+    n_deferred: int = 0
 
 
 @dataclass
@@ -598,9 +618,6 @@ class CrawlEngine:
         checkpoints (pass ``initial_visited`` again when resuming a
         chained run)."""
         cfg = self.cfg
-        spark = self.spark
-        lineage: list[dict[str, Any]] = []
-
         src = seeds.select(
             "source_id",
             F.col("url").alias("source_url"),
@@ -616,108 +633,47 @@ class CrawlEngine:
         )
         self._run_seen = None
 
-        if resume:
-            state = self._load_latest(run_id)
-            if state is not None:
-                # the run's checkpoints hold only ITS deltas — the caller
-                # re-supplies the chained prior state on resume
-                self._run_seen = state["visited"]
-                return self._run_rounds(
-                    run_id,
-                    state["pages"],
-                    self._commit_visited(run_id, state["current_depth"]),
-                    state["frontier"],
-                    state["counters"],
-                    state["current_depth"],
-                    state["lineage"],
-                    deferred=state["deferred"],
-                )
-
-        # ---- depth 0: CrawlInitialURL (web.go:912-993) ----
         t0 = time.time()
-        if self.work_dir:
-            # a run that starts at round 0 owns its state directory: the
-            # rounds of an earlier run under this run_id must not stay
-            # behind for a later resume to load
-            shutil.rmtree(f"{self.work_dir}/{run_id}", ignore_errors=True)
-        # every depth-0 table is a projection of the fetched seeds and
-        # their links: materialize each once instead of re-planning them
-        # under every commit
-        with self._phase(run_id, 0, "seed"):
-            seed_ok = src.join(
-                self.fetch_side, src["source_url"] == self.fetch_side["doc_id"]
-            ).localCheckpoint(eager=True)
-        # initial links keep page_url = source URL (web.go:949-951). The
-        # alternative_links of Sources.config follow them in config
-        # order, each once and only if not already extracted — exact
-        # string match, like the growing initialLinks check
-        # (crawler.go:318-353); array_except keeps first occurrences.
-        links = F.coalesce(F.array_compact("links"), F.array())
-        if "config" in src.columns:
-            alts = F.from_json(
-                F.col("config"),
-                "struct<crawling_config:struct<alternative_links:array<string>>>",
-            )["crawling_config"]["alternative_links"]
-            links = F.concat(links, F.array_except(F.coalesce(alts, F.array()), links))
-        frontier = seed_ok.select(
-            "source_id",
-            "source_url",
-            "restricted",
-            "priority",
-            F.posexplode(links).alias("seq", "link"),
-            F.col("source_url").alias("page_url"),
-        )
-        with self._phase(run_id, 0, "seed_links"):
-            frontier = frontier.localCheckpoint(eager=True)
-        # counters live as a small DataFrame for the whole crawl — never
-        # as a driver dict (a 10^5-10^6-source claim embedded in plan
-        # literals or collect()ed per round is a driver OOM; SURVEY §4).
-        # Every claimed source gets a row; TotalLinks counts the initial
-        # links BEFORE the restricted gate (crawler.go:412) …
-        counters = _sum_counters(
-            src.select("source_id"),
-            seed_ok.select("source_id", F.lit(1).alias("pages")),
-            frontier.select("source_id", F.lit(1).alias("links")),
-        )
-        # … then: restricted==0 sources never enter the BFS loop (crawler.go:414)
-        frontier = self._trap_valve(frontier.filter(F.col("restricted") != 0))
-
-        pages = seed_ok.select(
-            "source_id",
-            F.lit(0).alias("depth"),
-            F.lit(0).cast("long").alias("fetch_seq"),
-            F.col("source_url").alias("url"),
-        )
-        seed_vis = self._with_seen_norm(seed_ok, "source_url").select(
-            "source_id", "norm_url"
-        )
-        if self._prior_seen is not None:
-            # this run's depth-0 DELTA: seed keys not already seen
-            visited = seed_vis.join(self._prior_seen, ["source_id", "norm_url"], "left_anti")
+        loaded = self._load_latest(run_id) if resume else None
+        if loaded is not None:
+            # the run's checkpoints hold only ITS deltas — the caller
+            # re-supplies the chained prior state on resume; the
+            # committed frontier and deferred rows are counted once
+            live, depth, self._run_seen = loaded
+            live.n_frontier = live.frontier.count()
+            live.n_deferred = live.deferred.count() if live.deferred is not None else 0
+            lineage = [{"run_id": run_id, "round": depth, "resumed": True}]
+            round_table = None
         else:
-            visited = seed_vis
-        # depth-0 state is the base delta of the append-only page/visited logs
-        pages = self._ckpt_delta(None, pages, run_id, 0, "pages")
-        visited = self._commit_visited(run_id, 0, visited)
-        # the round's driver-side numbers are observed on its commits
-        frontier, frontier_obs = _observed(frontier, F.count(F.lit(1)).alias("rows"))
-        frontier = self._ckpt(frontier, run_id, 0, "frontier")
-        counters, counters_obs = _observed(counters, F.sum("pages").alias("pages"))
-        counters = self._ckpt(counters, run_id, 0, "counters")
-        lineage.append(
-            {
-                "run_id": run_id,
-                "round": 0,
-                "frontier_in": 0,
-                "fetched": _obs_int(counters_obs)["pages"],
-                "elapsed_sec": time.time() - t0,
-            }
+            if self.work_dir:
+                # a run that starts at round 0 owns its state directory:
+                # the rounds of an earlier run under this run_id must not
+                # stay behind for a later resume to load
+                shutil.rmtree(f"{self.work_dir}/{run_id}", ignore_errors=True)
+            # counters live as a small DataFrame for the whole crawl —
+            # never as a driver dict (a 10^5-10^6-source claim embedded in
+            # plan literals or collect()ed per round is a driver OOM;
+            # SURVEY §4). Every claimed source starts with a row of zeros.
+            live, depth, lineage = _Live(counters=src.select("source_id")), 0, []
+            round_table = self._seed_table(src, run_id)
+
+        # max_depth=0 extends the depth while new links come (crawler.go:496-498)
+        last_depth = min(cfg.max_depth or cfg.max_rounds, cfg.max_rounds)
+        while True:
+            if round_table is not None:
+                lineage.append(self._commit_round(live, *round_table, run_id, depth, t0))
+            if depth >= last_depth or live.n_frontier + live.n_deferred == 0:
+                break
+            t0 = time.time()
+            depth += 1
+            round_table = self._process_level(self._level(live), live, run_id, depth)
+
+        if self.work_dir:
+            self._write_lineage(lineage, run_id)
+        crawl_order = live.pages.select(
+            "source_id", F.col("fetch_seq").alias("seq"), "depth", "url"
         )
-        self._write_manifest(run_id, 0, 0)
-        return self._run_rounds(
-            run_id, pages, visited, frontier, counters, 0, lineage,
-            n_frontier=_obs_int(frontier_obs)["rows"],
-        )
+        return CrawlResult(live.pages, crawl_order, self._live_seen(), live.counters, lineage)
 
     def release_seen(self, visited: DataFrame, eligible: DataFrame) -> DataFrame:
         """Re-crawl eligibility: drop interval-eligible sources' URLs
@@ -751,178 +707,176 @@ class CrawlEngine:
             old.unpersist()
         return visited.join(el, "source_id", "left_anti")
 
-    def _commit_visited(
-        self, run_id: str, rnd: int, delta: DataFrame | None = None
-    ) -> DataFrame:
-        """Commit round ``rnd``'s visited ``delta`` and return the live
-        seen set: this run's committed deltas ∪ the chained prior-run
-        set (which its own run's checkpoints store — never re-committed
-        here). The delta also enters the cuckoo filter when one exists:
-        a filter reused across runs must hold every key the exact set
-        holds, or a later link back to it would probe "definitely
-        unseen" and skip the exact check. ``delta=None`` commits
-        nothing (a resumed run's deltas are already committed)."""
-        if delta is not None:
-            if self._cuckoo is not None:
-                # incremental maintenance: insert only the delta
-                # (O(delta)); checkpoint the small blob table so the
-                # plan never chains across rounds
-                from .cuckoo import insert_cuckoo
-
-                self._cuckoo = self._ckpt(
-                    insert_cuckoo(
-                        self._cuckoo, delta.select(_seen_key()), key_col="_skey",
-                        n_buckets=self.cfg.salt_buckets,
-                    ),
-                    run_id, rnd, "cuckoo",
-                )
-            self._run_seen = self._ckpt_delta(self._run_seen, delta, run_id, rnd, "visited")
+    def _live_seen(self) -> DataFrame:
+        """The live seen set: this run's committed visited deltas ∪ the
+        chained prior-run set (which its own run's checkpoints store —
+        never re-committed here)."""
         if self._prior_seen is None:
             return self._run_seen
         return self._run_seen.unionByName(self._prior_seen)
 
-    def _run_rounds(
-        self,
-        run_id: str,
-        pages: DataFrame,
-        visited: DataFrame,
-        frontier: DataFrame,
-        counters: DataFrame,
-        start_depth: int,
-        lineage: list[dict[str, Any]],
-        deferred: DataFrame | None = None,
-        n_frontier: int | None = None,
-    ) -> CrawlResult:
-        cfg = self.cfg
-        max_depth = 1 if cfg.max_depth == 0 else cfg.max_depth
-        current_depth = start_depth
-        if cfg.max_depth == 0:
-            max_depth = current_depth + 1
+    def _commit_visited(self, run_id: str, rnd: int, delta: DataFrame) -> None:
+        """Commit round ``rnd``'s visited ``delta``. The delta also
+        enters the cuckoo filter when one exists: a filter reused across
+        runs must hold every key the exact set holds, or a later link
+        back to it would probe "definitely unseen" and skip the exact
+        check."""
+        if self._cuckoo is not None:
+            # incremental maintenance: insert only the delta (O(delta));
+            # checkpoint the small blob table so the plan never chains
+            # across rounds
+            from .cuckoo import insert_cuckoo
 
-        # a resumed run counts its committed frontier and deferred rows
-        # once; from then on every round observes them on its own commits
-        if n_frontier is None:
-            n_frontier = frontier.count()
-        n_deferred = deferred.count() if deferred is not None else 0
-
-        while current_depth < max_depth and current_depth < cfg.max_rounds:
-            n_in = n_frontier + n_deferred
-            if n_in == 0:
-                break
-            t0 = time.time()
-            depth = current_depth + 1
-
-            level = frontier.withColumn("_pri", F.lit(1))
-            if deferred is not None and n_deferred > 0:
-                # deferred links go first in the next round (north mode)
-                level = deferred.select(frontier.columns).withColumn(
-                    "_pri", F.lit(0)
-                ).unionByName(level)
-            w_seq = Window.partitionBy(*self._seq_parts()).orderBy("_pri", "seq", "link")
-            level = level.withColumn(
-                "seq", self._seq_expr(F.row_number().over(w_seq))
-            ).drop("_pri")
-
-            # explicit skew-kill: spread one host's links over salt buckets
-            level = level.repartition(
-                F.col("source_id"),
-                U.salted_host_key(U.url_hostname("link"), F.col("link"), cfg.salt_buckets),
-            )
-
-            rt, tot = self._process_level(level, visited, pages, run_id, depth, counters)
-            category = F.col("category")
-
-            # effects → next-round state, every one a filter or projection
-            # of the round table. Pages/visited are APPEND-ONLY: each round
-            # commits only its DELTA (the Iceberg-append analog) and the
-            # live state is a union-scan over committed deltas — per-round
-            # write cost stays O(delta), not O(total-so-far), which is the
-            # difference between a crawl that holds at 10^10 URLs and one
-            # whose checkpoint I/O grows quadratically with crawl length.
-            # Attempted rows are unseen and first in their (source_id,
-            # norm_url) group (that is what made them fetch_ok/fetch_err
-            # rather than dup), so their projection IS the visited delta.
-            visited_delta = rt.filter(category.isin(CAT_FETCH_OK, CAT_FETCH_ERR)).select(
-                "source_id", "norm_url"
-            )
-            new_pages = rt.filter(category == CAT_FETCH_OK).select(
-                "source_id",
-                F.lit(depth).alias("depth"),
-                "fetch_seq",
-                F.col("url_link").alias("url"),
-            )
-            pages = self._ckpt_delta(pages, new_pages, run_id, depth, "pages")
-            visited = self._commit_visited(run_id, depth, visited_delta)
-
-            new_links = self._next_links(rt)
-            frontier, frontier_obs = _observed(
-                self._trap_valve(new_links), F.count(F.lit(1)).alias("rows")
-            )
-            frontier = self._ckpt(frontier, run_id, depth, "frontier")
-            n_frontier = _obs_int(frontier_obs)["rows"]
-            if self.budgets is not None:
-                # deferred rows are next-round input state — commit them
-                # like the frontier so kill-and-resume replays them too
-                deferred = self._ckpt(
-                    rt.filter(category == CAT_DEFERRED).select(*FRONTIER_COLS),
-                    run_id, depth, "deferred",
-                )
-            n_deferred = tot["deferred"]
-
-            # the round's rows add their categories to the running
-            # counters; per-source links are the committed frontier,
-            # counted before the trap valve (capped links were still
-            # discovered)
-            counters = self._ckpt(
-                _sum_counters(
-                    counters,
-                    rt.select("source_id", *[
-                        (category == c).cast("long").alias(k) for k, c in _STAT_CATEGORIES
-                    ]),
-                    (new_links if cfg.trap_cap else frontier).select(
-                        "source_id", F.lit(1).alias("links")
-                    ),
+            self._cuckoo = self._ckpt(
+                insert_cuckoo(
+                    self._cuckoo, delta.select(_seen_key()), key_col="_skey",
+                    n_buckets=self.cfg.salt_buckets,
                 ),
-                run_id, depth, "counters",
+                run_id, rnd, "cuckoo",
             )
+        self._run_seen = self._ckpt_delta(self._run_seen, delta, run_id, rnd, "visited")
 
-            lineage.append(
-                {
-                    "run_id": run_id,
-                    "round": depth,
-                    "frontier_in": n_in,
-                    "fetched": tot["pages"],
-                    "skipped": tot["skipped"],
-                    "duplicates": tot["duplicates"],
-                    "errors": tot["errors"],
-                    "elapsed_sec": time.time() - t0,
-                    # per-partition metrics over the round table's own
-                    # layout (the processed level's final partitioning,
-                    # after the level's join/window shuffles, not the
-                    # salted repartition itself): skew_ratio 1.0 = even;
-                    # >> 1 = end-of-round imbalance worth investigating
-                    "partitions": tot["partitions"],
-                    "max_partition_rows": tot["max_partition_rows"],
-                    "skew_ratio": round(
-                        tot["max_partition_rows"] * tot["partitions"] / tot["rows"], 3
-                    )
-                    if tot["rows"]
-                    else 1.0,
-                }
-            )
+    def _seed_table(self, src: DataFrame, run_id: str) -> tuple[DataFrame, dict[str, int]]:
+        """Round 0 (CrawlInitialURL, web.go:912-993) as a round table:
+        one fetch_ok row per fetched seed, with ``fetch_seq`` 0 and
+        ``url_link`` = ``page_url`` = the source URL (web.go:949-951).
+        The seed fetch is a plain join: no skip, robots, seen or budget
+        step. ``_doc_links`` holds the seed links: the extracted links,
+        then the ``alternative_links`` of ``Sources.config`` in config
+        order, each once and only if not already extracted — exact
+        string match, like the growing initialLinks check
+        (crawler.go:318-353); ``array_except`` keeps first occurrences."""
+        links = F.coalesce(F.col("links"), F.array())
+        if "config" in src.columns:
+            alts = F.from_json(
+                F.col("config"),
+                "struct<crawling_config:struct<alternative_links:array<string>>>",
+            )["crawling_config"]["alternative_links"]
+            links = F.concat(links, F.array_except(F.coalesce(alts, F.array()), links))
+        url = F.col("source_url")
+        seeds = src.join(self.fetch_side, url == self.fetch_side["doc_id"]).select(
+            "source_id",
+            "source_url",
+            "restricted",
+            "priority",
+            F.lit(0).alias("seq"),
+            url.alias("link"),
+            url.alias("page_url"),
+            url.alias("url_link"),
+            F.lit(CAT_FETCH_OK).alias("category"),
+            F.lit(0).cast("long").alias("fetch_seq"),
+            links.alias("_doc_links"),
+            F.lit(None).cast("int").alias("_next_attempt"),
+            F.lit(None).cast("boolean").alias("_next_ok"),
+        )
+        return self._materialize(self._with_seen_norm(seeds, "url_link"), run_id, 0, "seed")
 
-            self._write_manifest(run_id, depth, depth)
-            current_depth += 1
-            if cfg.max_depth == 0:
-                max_depth = current_depth + 1  # crawler.go:496-498
-
-        crawl_order = pages.select(
-            "source_id", F.col("fetch_seq").alias("seq"), "depth", "url"
+    def _level(self, live: _Live) -> DataFrame:
+        """The next round's input: the frontier, after the deferred rows
+        (north mode), renumbered per source and spread over salted host
+        partitions."""
+        level = live.frontier.withColumn("_pri", F.lit(1))
+        if live.n_deferred:
+            level = live.deferred.select(live.frontier.columns).withColumn(
+                "_pri", F.lit(0)
+            ).unionByName(level)
+        w_seq = Window.partitionBy(*self._seq_parts()).orderBy("_pri", "seq", "link")
+        level = level.withColumn("seq", self._seq_expr(F.row_number().over(w_seq))).drop("_pri")
+        # explicit skew-kill: spread one host's links over salt buckets
+        return level.repartition(
+            F.col("source_id"),
+            U.salted_host_key(U.url_hostname("link"), F.col("link"), self.cfg.salt_buckets),
         )
 
-        if self.work_dir:
-            self._write_lineage(lineage, run_id)
-        return CrawlResult(pages, crawl_order, visited, counters, lineage)
+    def _commit_round(
+        self, live: _Live, rt: DataFrame, tot: dict[str, int], run_id: str, depth: int, t0: float
+    ) -> dict[str, Any]:
+        """Commit round ``depth``'s table ``rt`` — the seed table at
+        depth 0 — into ``live`` and return the round's lineage row.
+
+        Every state delta is a filter or projection of the round table.
+        Pages/visited are APPEND-ONLY: each round commits only its DELTA
+        (the Iceberg-append analog) and the live state is a union-scan
+        over committed deltas — per-round write cost stays O(delta), not
+        O(total-so-far), which is the difference between a crawl that
+        holds at 10^10 URLs and one whose checkpoint I/O grows
+        quadratically with crawl length."""
+        category = F.col("category")
+        n_in = live.n_frontier + live.n_deferred
+        new_pages = rt.filter(category == CAT_FETCH_OK).select(
+            "source_id",
+            F.lit(depth).alias("depth"),
+            "fetch_seq",
+            F.col("url_link").alias("url"),
+        )
+        live.pages = self._ckpt_delta(live.pages, new_pages, run_id, depth, "pages")
+        # Attempted rows are unseen and first in their (source_id,
+        # norm_url) group (that is what made them fetch_ok/fetch_err
+        # rather than dup), so their projection IS the visited delta …
+        visited = rt.filter(category.isin(CAT_FETCH_OK, CAT_FETCH_ERR)).select(
+            "source_id", "norm_url"
+        )
+        if depth == 0 and self._prior_seen is not None:
+            # … except at depth 0: the seed fetch has no seen check, so a
+            # seed the chained set holds is a page but not a new key
+            visited = visited.join(self._prior_seen, ["source_id", "norm_url"], "left_anti")
+        self._commit_visited(run_id, depth, visited)
+
+        # the seed links are never MaxLinks-truncated, and restricted==0
+        # sources never enter the BFS loop (crawler.go:412-414)
+        new_links = self._next_links(rt, truncate=depth > 0)
+        frontier, frontier_obs = _observed(
+            self._trap_valve(new_links.filter(F.col("restricted") != 0)),
+            F.count(F.lit(1)).alias("rows"),
+        )
+        live.frontier = self._ckpt(frontier, run_id, depth, "frontier")
+        live.n_frontier = _obs_int(frontier_obs)["rows"]
+        live.n_deferred = tot["deferred"]
+        if self.budgets is not None and depth > 0:
+            # deferred rows are next-round input state — commit them
+            # like the frontier so kill-and-resume replays them too (the
+            # seed fetch has no budget step: round 0 defers nothing)
+            live.deferred = self._ckpt(
+                rt.filter(category == CAT_DEFERRED).select(*FRONTIER_COLS),
+                run_id, depth, "deferred",
+            )
+
+        # the round's rows add their categories to the running counters;
+        # per-source links are the committed frontier, counted before the
+        # trap valve (capped links were still discovered) and, at depth
+        # 0, before the restricted gate (crawler.go:412)
+        links = new_links if self.cfg.trap_cap or depth == 0 else live.frontier
+        live.counters = self._ckpt(
+            _sum_counters(
+                live.counters,
+                rt.select("source_id", *[
+                    (category == c).cast("long").alias(k) for k, c in _STAT_CATEGORIES
+                ]),
+                links.select("source_id", F.lit(1).alias("links")),
+            ),
+            run_id, depth, "counters",
+        )
+        self._write_manifest(run_id, depth, depth)
+        return {
+            "run_id": run_id,
+            "round": depth,
+            "frontier_in": n_in,
+            "fetched": tot["pages"],
+            "skipped": tot["skipped"],
+            "duplicates": tot["duplicates"],
+            "errors": tot["errors"],
+            "elapsed_sec": time.time() - t0,
+            # per-partition metrics over the round table's own layout
+            # (the processed level's final partitioning, after the
+            # level's join/window shuffles, not the salted repartition
+            # itself): skew_ratio 1.0 = even; >> 1 = end-of-round
+            # imbalance worth investigating
+            "partitions": tot["partitions"],
+            "max_partition_rows": tot["max_partition_rows"],
+            "skew_ratio": round(tot["max_partition_rows"] * tot["partitions"] / tot["rows"], 3)
+            if tot["rows"]
+            else 1.0,
+        }
 
     # ------------------------------------------------------ level logic
 
@@ -948,13 +902,7 @@ class CrawlEngine:
         )
 
     def _process_level(
-        self,
-        level: DataFrame,
-        visited: DataFrame,
-        pages: DataFrame,
-        run_id: str,
-        depth: int,
-        counters: DataFrame,
+        self, level: DataFrame, live: _Live, run_id: str, depth: int
     ) -> tuple[DataFrame, dict[str, int]]:
         """One BFS level for all sources — the worker loop, set-at-a-time.
 
@@ -965,17 +913,15 @@ class CrawlEngine:
         outcome of the next attempted row, for skipped-link
         resurrection), plus ``_pages_after`` (the source's TotalPages
         after the level) under ``max_links``. Every state delta of the
-        round is a filter or projection of it. Returns the table and the
-        round's totals, observed while the table is materialized: rows
-        per category (``pages`` = fetch_ok), ``rows``, and the table's
-        non-empty ``partitions`` and ``max_partition_rows``.
+        round is a filter or projection of it (:meth:`_commit_round`).
 
-        ``counters`` is the running per-source counter table (small:
-        one row per claimed source); it is broadcast-joined wherever the
-        reference's worker reads its own Status struct — never collected
-        to the driver, never embedded in plan literals.
+        The running per-source counter table (small: one row per claimed
+        source) is broadcast-joined wherever the reference's worker
+        reads its own Status struct — never collected to the driver,
+        never embedded in plan literals.
         """
         cfg = self.cfg
+        visited = self._live_seen()
 
         # resolve relative links (crawler.go:2210-2212) + seen-key
         lv = self._with_seen_norm(
@@ -1033,7 +979,7 @@ class CrawlEngine:
 
         # global-known probe (PreventDuplicateURLs, queries.go:74-88)
         if cfg.prevent_duplicate_urls:
-            known = self._with_seen_norm(pages, "url").select(
+            known = self._with_seen_norm(live.pages, "url").select(
                 "norm_url"
             ).distinct().withColumn("_known", F.lit(True))
             lv = lv.join(known, ["norm_url"], "left").withColumn(
@@ -1097,7 +1043,7 @@ class CrawlEngine:
         # a broadcast join (NOT a per-source plan literal, which explodes
         # the plan at a 10^5+-source claim)
         lv = lv.join(
-            F.broadcast(counters.select("source_id", F.col("pages").alias("_pages_before"))),
+            F.broadcast(live.counters.select("source_id", F.col("pages").alias("_pages_before"))),
             "source_id",
             "left",
         ).withColumn("_pages_before", F.coalesce(F.col("_pages_before"), F.lit(0)))
@@ -1151,10 +1097,19 @@ class CrawlEngine:
             F.col("_next.seq").alias("_next_attempt"),
             F.col("_next.ok").alias("_next_ok"),
             *(["_pages_after"] if cfg.max_links > 0 else []),
-            # partition id (high bits) + record number within it: the
-            # table's own layout, for the lineage row's skew metrics
-            F.monotonically_increasing_id().alias("_mid"),
         )
+        return self._materialize(rt, run_id, depth, "classify")
+
+    def _materialize(
+        self, rt: DataFrame, run_id: str, depth: int, phase: str
+    ) -> tuple[DataFrame, dict[str, int]]:
+        """Checkpoint a round table once and return it with the round's
+        totals, observed while it is materialized: rows per category
+        (``pages`` = fetch_ok), ``rows``, and the table's non-empty
+        ``partitions`` and ``max_partition_rows``."""
+        # partition id (high bits) + record number within it: the
+        # table's own layout, for the lineage row's skew metrics
+        rt = rt.withColumn("_mid", F.monotonically_increasing_id())
         rec = F.col("_mid").bitwiseAND(F.lit((1 << 33) - 1))
         rt, obs = _observed(
             rt,
@@ -1166,16 +1121,17 @@ class CrawlEngine:
             F.sum((rec == 0).cast("long")).alias("partitions"),
             F.max(rec + 1).alias("max_partition_rows"),
         )
-        with self._phase(run_id, depth, "classify"):
+        with self._phase(run_id, depth, phase):
             rt = rt.localCheckpoint(eager=True)
         return rt, _obs_int(obs)
 
-    def _next_links(self, rt: DataFrame) -> DataFrame:
+    def _next_links(self, rt: DataFrame, truncate: bool) -> DataFrame:
         """The round's discovered links in next-frontier order: each
-        fetched page's extracted links, with the skipped links that
-        resurrect onto it, numbered per source; MaxLinks-truncated."""
+        fetched page's links, with the skipped links that resurrect onto
+        it, numbered per source; MaxLinks-truncated if ``truncate``."""
         cfg = self.cfg
-        keep = ["_pages_after"] if cfg.max_links > 0 else []
+        truncate = truncate and cfg.max_links > 0
+        keep = ["_pages_after"] if truncate else []
         extracted = rt.filter(F.col("category") == CAT_FETCH_OK).select(
             "source_id",
             "source_url",
@@ -1183,10 +1139,10 @@ class CrawlEngine:
             "priority",
             F.col("seq").alias("_attach"),
             F.lit(0).alias("_res"),
-            F.posexplode_outer("_doc_links").alias("_pos", "link"),
+            F.posexplode("_doc_links").alias("_pos", "link"),
             F.col("url_link").alias("page_url"),
             *keep,
-        ).filter(F.col("link").isNotNull())
+        )
         resurrected = rt.filter((F.col("category") == CAT_SKIP) & F.col("_next_ok")).select(
             "source_id",
             "source_url",
@@ -1206,7 +1162,7 @@ class CrawlEngine:
 
         # MaxLinks prefix truncation AFTER the level (crawler.go:475-483):
         # keep the first (max_links - TotalPages_after) per source
-        if cfg.max_links > 0:
+        if truncate:
             new_links = new_links.filter(F.col("seq") < F.lit(cfg.max_links) - F.col("_pages_after"))
         return new_links.select(*FRONTIER_COLS)
 
@@ -1273,8 +1229,9 @@ class CrawlEngine:
             json.dump({"round": rnd, "depth": depth}, f)
         os.replace(tmp, path)
 
-    def _load_latest(self, run_id: str) -> dict[str, Any] | None:
-        """Load the newest committed round's state (kill-and-resume)."""
+    def _load_latest(self, run_id: str) -> tuple[_Live, int, DataFrame] | None:
+        """Load the newest committed round's state (kill-and-resume):
+        the live state, its depth and this run's committed seen set."""
         if not self.work_dir:
             return None
 
@@ -1304,15 +1261,13 @@ class CrawlEngine:
             deferred = None
             if os.path.exists(f"{rdir}/deferred/_SUCCESS"):
                 deferred = self.spark.read.parquet(f"{rdir}/deferred")
-            return {
-                "pages": self.spark.read.parquet(*pages_dirs),
-                "visited": self.spark.read.parquet(*visited_dirs),
-                "frontier": self.spark.read.parquet(f"{rdir}/frontier"),
-                "counters": self.spark.read.parquet(f"{rdir}/counters"),
-                "deferred": deferred,
-                "current_depth": meta["depth"],
-                "lineage": [{"run_id": run_id, "round": rnd, "resumed": True}],
-            }
+            live = _Live(
+                pages=self.spark.read.parquet(*pages_dirs),
+                counters=self.spark.read.parquet(f"{rdir}/counters"),
+                frontier=self.spark.read.parquet(f"{rdir}/frontier"),
+                deferred=deferred,
+            )
+            return live, meta["depth"], self.spark.read.parquet(*visited_dirs)
         return None
 
     def _write_lineage(self, lineage: list[dict[str, Any]], run_id: str) -> None:
