@@ -281,26 +281,24 @@ def q_frontier_claim_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_politeness_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-host window-rank budget (core politeness operator, SURVEY §2.5).
+    """Per-host politeness budget through the engine's operator (SURVEY
+    §2.5): 20 hosts, 5 fetches each; the host/URL strings are built for
+    the ≤ 100 kept rows only."""
+    from thecrowler_spark.operators.politeness import enforce_host_budget
 
-    r6 optimization (guide §2.3 "project before the exchange"): the
-    host/url strings are concatenated AFTER the rank filter — only the
-    ≤100 surviving rows pay string building, and the rank sort/exchange
-    move three narrow numeric columns instead of two ~60-byte strings.
-    Result is identical (same columns from the same source keys)."""
-    _load(spark, sf_dir, "lineitem")
-    return spark.sql(
-        """
-        SELECT concat('h', CAST(hk AS STRING), '.example.com') AS host,
-               concat('https://h', CAST(hk AS STRING), '.example.com/o',
-                      CAST(l_orderkey AS STRING), '/', CAST(l_linenumber AS STRING)) AS url,
-               fetch_rank
-        FROM (
-          SELECT l_suppkey % 20 AS hk, l_orderkey, l_linenumber,
-                 ROW_NUMBER() OVER (PARTITION BY l_suppkey % 20 ORDER BY l_orderkey, l_linenumber) AS fetch_rank
-          FROM lineitem
-        ) WHERE fetch_rank <= 5
-        """
+    li = _load(spark, sf_dir, "lineitem")["lineitem"]
+    links = li.select((F.col("l_suppkey") % 20).alias("hk"), "l_orderkey", "l_linenumber")
+    budgets = spark.range(20).select(
+        F.col("id").alias("host"), F.lit(5).alias("max_fetches_per_round")
+    )
+    kept = enforce_host_budget(
+        links, budgets, host_col="hk", order_cols=("l_orderkey", "l_linenumber")
+    )
+    return kept.selectExpr(
+        "concat('h', CAST(hk AS STRING), '.example.com') AS host",
+        "concat('https://h', CAST(hk AS STRING), '.example.com/o',"
+        " CAST(l_orderkey AS STRING), '/', CAST(l_linenumber AS STRING)) AS url",
+        "fetch_rank",
     )
 
 

@@ -109,6 +109,66 @@ def test_filters_global_cap(spark):
     assert over == 13
 
 
+def test_host_dedup_and_caps_equal_sequential_reference(spark):
+    """The host dedup and the per-host / per-domain caps (the salted
+    per-key cap) reject exactly what a sequential pass in cand_id order
+    rejects, with a hot host that overflows its salt buckets."""
+    hosts = [f"h{j}.site{j % 3}.com" for j in range(6)]
+    rows = []
+    for i in range(400):
+        host = hosts[0] if i % 2 == 0 else hosts[1 + i % 5]
+        url = "not a url" if i % 37 == 5 else f"https://{host}/p{i % 300}"
+        rows.append((i, url))
+    df = spark.createDataFrame(rows, "cand_id long, url string")
+
+    def sequential(host_cap, domain_cap, dedup_host):
+        seen, first_host, n_host, n_domain, want = set(), set(), {}, {}, {}
+        for i, url in rows:
+            if url == "not a url":
+                want[i] = "invalid_url"
+            elif url in seen:
+                want[i] = "duplicate_url"
+            else:
+                seen.add(url)
+                host = url.split("/")[2]
+                if dedup_host:
+                    want[i] = "duplicate_host" if host in first_host else None
+                    first_host.add(host)
+                    continue
+                # reservation semantics: each cap counts the rows the
+                # earlier checks kept
+                n_host[host] = n_host.get(host, 0) + 1
+                domain = host.split(".", 1)[1]
+                if n_host[host] > host_cap:
+                    want[i] = "max_candidates_per_host"
+                    continue
+                n_domain[domain] = n_domain.get(domain, 0) + 1
+                want[i] = "max_candidates_per_domain" if n_domain[domain] > domain_cap else None
+        return want
+
+    got = {
+        r["cand_id"]: r["reject_reason"]
+        for r in normalize_candidates(df, dedup_host=True).collect()
+    }
+    assert got == sequential(0, 0, dedup_host=True)
+    assert list(got.values()).count(None) == len(hosts)  # one row per host
+
+    normed = normalize_candidates(df)
+    capped = apply_candidate_filters(
+        normed.filter(F.col("reject_reason").isNull()).drop("reject_reason"),
+        max_per_host=7,
+        max_per_domain=10,
+    )
+    got = {r["cand_id"]: r["reject_reason"] for r in capped.collect()}
+    got.update(
+        (r["cand_id"], r["reject_reason"])
+        for r in normed.filter(F.col("reject_reason").isNotNull()).collect()
+    )
+    want = sequential(7, 10, dedup_host=False)
+    assert got == want
+    assert {"max_candidates_per_host", "max_candidates_per_domain"} <= set(want.values())
+
+
 def test_frontier_strip_tracking_collapses_utm_variants(spark):
     """With strip_tracking on, ?utm_source variants of an already-seen
     URL are duplicates (one frontier fetch); off, they refetch."""

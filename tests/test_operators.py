@@ -4,6 +4,7 @@ ANN-LSH recall vs brute force, streaming-vs-batch equivalence."""
 
 from __future__ import annotations
 
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from thecrowler_spark.operators import dedup as DD
@@ -24,16 +25,27 @@ def _links(spark, n=5000, hosts=7):
 
 
 def test_two_phase_budget_equals_single_window(spark):
-    links = _links(spark)
+    links = _links(spark, hosts=8)
     budgets = spark.createDataFrame(
         [(f"h{h}.example.com", 10 + h) for h in range(7)],
         "host string, max_fetches_per_round int",
     )
-    one = enforce_host_budget(links, budgets, order_cols=("priority", "seq"), two_phase=False)
-    two = enforce_host_budget(links, budgets, order_cols=("priority", "seq"), two_phase=True, salt_buckets=8)
+    # single-window reference: one host-wide row_number, kept while
+    # <= budget; h7 has no budget row, so it keeps every row unranked
+    w = Window.partitionBy("host").orderBy("priority", "seq")
+    budget = F.col("max_fetches_per_round")
+    one = (
+        links.join(budgets, "host", "left")
+        .withColumn("fetch_rank", F.when(budget.isNotNull(), F.row_number().over(w)))
+        .filter(budget.isNull() | (F.col("fetch_rank") <= budget))
+    )
+    two = enforce_host_budget(links, budgets, order_cols=("priority", "seq"), salt_buckets=8)
     a = {tuple(r) for r in one.select("host", "url_link", "fetch_rank").collect()}
     b = {tuple(r) for r in two.select("host", "url_link", "fetch_rank").collect()}
     assert a == b
+    unbudgeted = [r for r in b if r[0] == "h7.example.com"]
+    assert len(unbudgeted) == links.filter(F.col("host") == "h7.example.com").count()
+    assert all(r[2] is None for r in unbudgeted)
 
 
 def test_robots_prefix_filter_matches_oracle(spark):

@@ -107,7 +107,7 @@ def test_candidate_caps_two_phase(spark):
     task: every window over the candidate stream whose spec starts with
     the bare host/domain key must be preceded by the salted pre-rank
     (hashpartitioning on (key, _salt)), and the final windows only see
-    the bounded survivor set."""
+    the bounded survivor set — without splitting the row stream."""
     import re
 
     from thecrowler_spark.operators.candidates import apply_candidate_filters
@@ -122,6 +122,14 @@ def test_candidate_caps_two_phase(spark):
     # the salted phase-1 exchanges exist for both caps
     assert re.search(r"hashpartitioning\(_host#\d+, _salt#", plan)
     assert re.search(r"hashpartitioning\(domain#\d+, _salt#", plan)
+    # both caps are columns of the one row stream: the input is scanned
+    # once, and no filter branch is unioned or joined back
+    ops = [
+        re.sub(r"^[\s+\-:|]*(\*\(\d+\) )?", "", line).split(" ")[0]
+        for line in plan.splitlines()
+    ]
+    assert ops.count("Range") == 1
+    assert not [o for o in ops if o.endswith("Join") or o == "Union"]
 
 
 def test_dsir_broadcasts_weights_and_topk_has_no_global_sort(spark):

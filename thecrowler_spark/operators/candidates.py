@@ -5,15 +5,18 @@ Re-expresses /root/reference/pkg/infoseed/candidates.go:
 - :func:`normalize_candidates` ← ``NormalizeCandidatesWithRejections``
   (:133-161): canonicalize (tracking params stripped, query key-sorted,
   default port dropped), reject invalid URLs, dedup by normalized URL
-  then (optionally) by host — first occurrence in ``order_col`` wins,
-  every rejection carries its stable reason string (:46-56).
+  then (optionally) by host with the skew-safe per-key cap at 1 — first
+  occurrence in ``order_col`` wins, every rejection carries its stable
+  reason string (:46-56).
 - :func:`apply_candidate_filters` ← ``ApplyBuiltInCandidateFilters``
   (:165-222): required schemes, registrable-domain allow/deny sets,
-  min score, per-host / per-domain / global caps — each cap ranks the
-  survivors of the previous checks with the SKEW-SAFE two-phase shape
-  (salted pre-rank bounds every final window to cap × salt_buckets
-  rows, so a hot host with 10^8 candidates never lands on one task;
-  the global cap uses the two-phase distributed row number).
+  min score, per-host / per-domain / global caps — each per-host /
+  per-domain cap ranks the survivors of the previous checks with the
+  skew-safe per-key cap, :func:`.politeness.cap_flags` (two salted
+  ``row_number`` columns of the one row stream, so a hot host with 10^8
+  candidates never lands on one task, and no filter branch is unioned
+  or joined back); the global cap uses the two-phase distributed row
+  number (:func:`.ranking.global_row_number`).
 
 Documented divergences from the sequential Go loop (both engines —
 the DuckDB oracle mirrors these cascade semantics exactly):
@@ -38,6 +41,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import urls as U
+from .politeness import cap_flags
 
 #: stable rejection reasons (candidates.go:46-56)
 R_INVALID = "invalid_url"
@@ -62,7 +66,8 @@ def normalize_candidates(
     """Candidates → same rows + (url normalized, host, reject_reason).
 
     ``reject_reason`` is NULL for kept rows; rejected rows keep their
-    ORIGINAL url so the drop is auditable. One shuffle per dedup key.
+    ORIGINAL url so the drop is auditable. One shuffle for the URL
+    dedup, two (the salted pre-rank and the final rank) for the host dedup.
     """
     n = U.canonical_candidate_url(F.col(url_col), tracking_params)
     out = df.withColumn("_n", n)
@@ -80,19 +85,20 @@ def normalize_candidates(
         ),
     )
     if dedup_host:
-        # host dedup ranks only rows that passed the URL dedup
-        w_host = Window.partitionBy(
-            F.when(F.col("reject_reason").isNull(), F.col("host"))
-        ).orderBy(order_col)
-        host_rn = F.when(F.col("reject_reason").isNull(), F.row_number().over(w_host))
-        out = out.withColumn(
-            "reject_reason",
-            F.coalesce(
-                F.col("reject_reason"),
-                F.when(host_rn > 1, F.lit(R_DUP_HOST)),
-            ),
-        )
+        # the first row per host among those that passed the URL dedup
+        out = _cap_reject(out, "host", 1, order_col, R_DUP_HOST)
     return out
+
+
+def _cap_reject(df: DataFrame, key: str, cap: int, order_col: str, reason: str) -> DataFrame:
+    """Reject with ``reason`` the rows beyond ``cap`` per ``key`` (by
+    ``order_col``) among those no earlier check rejected — the skew-safe
+    per-key cap, so a hot host never lands on one task."""
+    out = cap_flags(df, key, cap, [order_col], eligible=F.col("reject_reason").isNull())
+    return out.withColumn(
+        "reject_reason",
+        F.coalesce(F.col("reject_reason"), F.when(F.col("_over"), F.lit(reason))),
+    ).drop("_over", "_rank")
 
 
 def apply_candidate_filters(
@@ -140,48 +146,12 @@ def apply_candidate_filters(
         reason = reason.when(F.col(score_col) < F.lit(min_score), F.lit(R_SCORE))
     out = out.withColumn("reject_reason", reason)
 
-    def _cap_two_phase(
-        part_col: str, cap: int, tag: str, d: DataFrame, salt_buckets: int = 16
-    ) -> DataFrame:
-        """Tag live rows beyond ``cap`` per ``part_col`` value WITHOUT a
-        single-task per-partition window (the politeness operator's
-        skew-safe shape, r4 VERDICT item 7): rank within (part, salt)
-        first — phase-1 over-cap rows can never be in the global
-        top-cap, so they are over by construction; the survivor set is
-        ≤ cap × salt_buckets per part, bounding the phase-2 window
-        regardless of how hot one host/domain is. Over-cap keys join
-        back on the unique ``order_col`` (an equi-join on a unique key,
-        skew-free), so rejected rows stay in the output with their
-        reason — identical accepted sets to the single-window form."""
-        live = d.filter(F.col("reject_reason").isNull()).select(order_col, part_col)
-        salt = F.pmod(F.xxhash64(F.col(order_col)), F.lit(salt_buckets))
-        w1 = Window.partitionBy(part_col, "_salt").orderBy(order_col)
-        pre = live.withColumn("_salt", salt).withColumn("_r1", F.row_number().over(w1))
-        over1 = pre.filter(F.col("_r1") > cap).select(order_col)
-        w2 = Window.partitionBy(part_col).orderBy(order_col)
-        over2 = (
-            pre.filter(F.col("_r1") <= cap)
-            .withColumn("_rn", F.row_number().over(w2))
-            .filter(F.col("_rn") > cap)
-            .select(order_col)
-        )
-        over = over1.union(over2).withColumnRenamed(order_col, "_over_key")
-        return (
-            d.join(over, d[order_col] == F.col("_over_key"), "left")
-            .withColumn(
-                "reject_reason",
-                F.coalesce(
-                    F.col("reject_reason"),
-                    F.when(F.col("_over_key").isNotNull(), F.lit(tag)),
-                ),
-            )
-            .drop("_over_key")
-        )
-
+    # each cap ranks the survivors of the earlier checks (reservation
+    # semantics, module docstring)
     if max_per_host > 0:
-        out = _cap_two_phase("_host", max_per_host, R_MAX_HOST, out)
+        out = _cap_reject(out, "_host", max_per_host, order_col, R_MAX_HOST)
     if max_per_domain > 0:
-        out = _cap_two_phase("domain", max_per_domain, R_MAX_DOMAIN, out)
+        out = _cap_reject(out, "domain", max_per_domain, order_col, R_MAX_DOMAIN)
     if max_candidates > 0:
         from .ranking import global_row_number
 

@@ -20,7 +20,7 @@ sequencing windows (``Window.partitionBy("source_id")``) are the price
 of reproducing the reference's workers=1 per-source total order — they
 parallelize across sources but serialize within one, so a single source
 whose one level emits ~10^8+ links pins one task for that window.
-Host-budget ranking is already two-phase (salt-parallel). For
+The host budget is salt-parallel (:func:`.politeness.cap_flags`). For
 deployments with mega-sources that do not need intra-source ordering
 parity, set ``CrawlConfig.ordering_shards > 1``: every sequencing
 window then partitions on (source_id, xxhash64(link) % shards) — same
@@ -65,6 +65,7 @@ from pyspark.sql import functions as F
 from ..functions import urls as U
 from ..session import job_description
 from . import spans as SP
+from .politeness import cap_flags
 
 # Row categories (one per reference worker outcome)
 CAT_SKIP = "skip"          # skip rules → TotalSkipped++, resurrectable
@@ -822,9 +823,8 @@ class CrawlEngine:
             visited = visited.join(self._prior_seen, ["source_id", "norm_url"], "left_anti")
         self._commit_visited(run_id, depth, visited)
 
-        # the seed links are never MaxLinks-truncated, and restricted==0
-        # sources never enter the BFS loop (crawler.go:412-414)
-        new_links = self._next_links(rt, truncate=depth > 0)
+        # restricted==0 sources never enter the BFS loop (crawler.go:412-414)
+        new_links = self._next_links(rt, depth)
         frontier, frontier_obs = _observed(
             self._trap_valve(new_links.filter(F.col("restricted") != 0)),
             F.count(F.lit(1)).alias("rows"),
@@ -843,18 +843,21 @@ class CrawlEngine:
 
         # the round's rows add their categories to the running counters;
         # per-source links are the committed frontier, counted before the
-        # trap valve (capped links were still discovered) and, at depth
-        # 0, before the restricted gate (crawler.go:412)
-        links = new_links if self.cfg.trap_cap or depth == 0 else live.frontier
-        live.counters = self._ckpt(
-            _sum_counters(
-                live.counters,
-                rt.select("source_id", *[
-                    (category == c).cast("long").alias(k) for k, c in _STAT_CATEGORIES
-                ]),
+        # trap valve (capped links were still discovered). At depth 0 they
+        # are the seed links, counted per seed row before the restricted
+        # gate (crawler.go:412) — no second plan of _next_links.
+        stats = [(category == c).cast("long").alias(k) for k, c in _STAT_CATEGORIES]
+        if depth == 0:
+            n_links = F.size(F.coalesce(F.col("_doc_links"), F.array()))
+            parts = [rt.select("source_id", *stats, n_links.alias("links"))]
+        else:
+            links = new_links if self.cfg.trap_cap else live.frontier
+            parts = [
+                rt.select("source_id", *stats),
                 links.select("source_id", F.lit(1).alias("links")),
-            ),
-            run_id, depth, "counters",
+            ]
+        live.counters = self._ckpt(
+            _sum_counters(live.counters, *parts), run_id, depth, "counters"
         )
         self._write_manifest(run_id, depth, depth)
         return {
@@ -1004,15 +1007,10 @@ class CrawlEngine:
         lv = lv.withColumn("category", cat)
 
         # politeness budget (north-rule mode): cap successful fetches per
-        # host per round; excess re-queued next round, ordered first.
-        # Two-phase skew-safe rank (the operators/politeness.py contract)
-        # as columns of the one stream: _r1 ranks budget-capped fetch_ok
-        # rows within (host, salt) — parallel across salt buckets; a
-        # local rank > B implies global rank > B, so those rows defer
-        # without entering a whole-host window. _r2 ranks only the ≤ B×S
-        # survivors per host; every other row stays in its salt bucket.
-        # Identical outcome to a single host-wide rank, but a mega-host
-        # with 10^9 pending URLs never pins one task.
+        # host per round; excess re-queued next round, ordered first. The
+        # skew-safe per-key cap (politeness.cap_flags) flags the over-cap
+        # fetch_ok rows as columns of the one stream, so a mega-host with
+        # 10^9 pending URLs never pins one task.
         if self.budgets is not None:
             lv = lv.withColumn("_bhost", U.url_hostname("url_link"))
             lv = lv.join(
@@ -1020,24 +1018,17 @@ class CrawlEngine:
                 ["_bhost"],
                 "left",
             )
-            budget = F.col("max_fetches_per_round")
-            lv = lv.withColumn(
-                "_capped", (F.col("category") == CAT_FETCH_OK) & budget.isNotNull()
-            ).withColumn(
-                "_salt", F.pmod(F.xxhash64(F.col("source_id"), F.col("seq")), F.lit(cfg.salt_buckets))
+            lv = cap_flags(
+                lv,
+                "_bhost",
+                F.col("max_fetches_per_round"),
+                ["priority", "source_id", "seq"],
+                eligible=F.col("category") == CAT_FETCH_OK,
+                salt_buckets=cfg.salt_buckets,
             )
-            order = [F.col("priority"), F.col("source_id"), F.col("seq")]
-            w1 = Window.partitionBy("_bhost", "_salt", "_capped").orderBy(*order)
-            lv = lv.withColumn("_r1", F.row_number().over(w1))
-            surv = F.col("_capped") & (F.col("_r1") <= budget)
-            w2 = Window.partitionBy(
-                "_bhost", F.when(surv, F.lit(-1)).otherwise(F.col("_salt"))
-            ).orderBy(*order)
-            lv = lv.withColumn("_r2", F.row_number().over(w2))
-            over = F.col("_capped") & ((F.col("_r1") > budget) | (F.col("_r2") > budget))
             lv = lv.withColumn(
-                "category", F.when(over, F.lit(CAT_DEFERRED)).otherwise(F.col("category"))
-            ).drop("max_fetches_per_round", "_bhost", "_capped", "_salt", "_r1", "_r2")
+                "category", F.when(F.col("_over"), F.lit(CAT_DEFERRED)).otherwise(F.col("category"))
+            ).drop("max_fetches_per_round", "_bhost", "_over", "_rank")
 
         # the worker's TotalPages-so-far comes from the counters table via
         # a broadcast join (NOT a per-source plan literal, which explodes
@@ -1125,12 +1116,15 @@ class CrawlEngine:
             rt = rt.localCheckpoint(eager=True)
         return rt, _obs_int(obs)
 
-    def _next_links(self, rt: DataFrame, truncate: bool) -> DataFrame:
+    def _next_links(self, rt: DataFrame, depth: int) -> DataFrame:
         """The round's discovered links in next-frontier order: each
         fetched page's links, with the skipped links that resurrect onto
-        it, numbered per source; MaxLinks-truncated if ``truncate``."""
+        it, numbered per source; MaxLinks-truncated after a BFS level.
+        The seed table (depth 0) holds one fetched row per source and no
+        skipped row, so a seed link's number is its position in
+        ``_doc_links``: no numbering window, and never truncated."""
         cfg = self.cfg
-        truncate = truncate and cfg.max_links > 0
+        truncate = depth > 0 and cfg.max_links > 0
         keep = ["_pages_after"] if truncate else []
         extracted = rt.filter(F.col("category") == CAT_FETCH_OK).select(
             "source_id",
@@ -1143,6 +1137,10 @@ class CrawlEngine:
             F.col("url_link").alias("page_url"),
             *keep,
         )
+        if depth == 0:
+            return extracted.withColumn("seq", self._seq_expr(F.col("_pos") + 1)).select(
+                *FRONTIER_COLS
+            )
         resurrected = rt.filter((F.col("category") == CAT_SKIP) & F.col("_next_ok")).select(
             "source_id",
             "source_url",

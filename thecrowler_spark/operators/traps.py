@@ -15,8 +15,9 @@ article archive is 10^6 templates with one URL each.
 Everything is JVM Column expressions (regexp over the URL stream, one
 (host, template) groupBy with partial aggregation — count-distinct on
 the 8-byte ``xxhash64(url)`` key, never the string); the per-template
-cap reuses the politeness operator's two-phase skew-safe rank, so a
-10^8-URL trap template never serializes onto one task.
+cap is :func:`.politeness.enforce_host_budget` keyed by template, so it
+runs the repo's one skew-safe per-key cap (:func:`.politeness.cap_flags`)
+and a 10^8-URL trap template never serializes onto one task.
 """
 
 from __future__ import annotations
@@ -104,10 +105,10 @@ def filter_trap_urls(
     ``traps`` is :func:`detect_traps` output (only ``is_trap`` rows are
     used — a tiny, broadcastable dimension by construction: there are
     few templates with very many URLs). Untrapped templates pass
-    through uncapped. The keep-set is deterministic (ordered by
-    ``order_cols``, default the URL itself) and the rank is the
-    politeness operator's two-phase shape: pre-rank within
-    (template, salt) then final rank over ≤ cap × salt_buckets
+    through uncapped, outside every template-wide window. The keep-set
+    is deterministic (ordered by ``order_cols``, default the URL itself)
+    and the rank is :func:`.politeness.cap_flags` within the template:
+    a salted pre-rank, then a final rank over the ≤ cap × salt_buckets
     survivors — a 10^8-URL trap never lands on one task.
     """
     from .politeness import enforce_host_budget
